@@ -403,15 +403,13 @@ object MseCompat {
 
   // ---------------------------------------------------------------- running
 
-  /** Run one case against pre-registered views. Applies the same
-    * facade rewrites a user query goes through: leading `SET k=v;`
-    * options parsed off, Pinot hint comments dropped, ASOF JOIN and
-    * reserved-name rewrites. */
+  /** Run one case against pre-registered views. Applies the facade
+    * rewrites a user query goes through (`QueryFacade.rewrite`):
+    * leading `SET k=v;` options parsed off, then every text pass. */
   def runCase(spark: SparkSession, c: MCase, views: Map[String, String]): MResult = {
     import graft.sql.QueryFacade
     if (c.ignored) return MResult(c, Skipped)
-    val QueryFacade.Parsed(_, stmt) = QueryFacade.parseOptions(substitute(c.sql, views))
-    val sql = QueryFacade.rewriteAsOf(QueryFacade.rewriteReserved(QueryFacade.stripHints(stmt)))
+    val sql = QueryFacade.rewrite(spark, substitute(c.sql, views))
     val attempt =
       try Right(spark.sql(sql).collect().toSeq)
       catch { case e: Throwable =>

@@ -538,15 +538,15 @@ object Dedup {
     // pair counts) the single limit+collect IS the only consumer, so
     // the eager materialization was a whole wasted pass over the edge
     // pipeline. The distributed fallback checkpoints below, unchanged.
-    // ADVICE r14: clamp the Long limit before toInt — a caller passing
-    // driverEdgeLimit >= Int.MaxValue would wrap negative and break
-    // the gate.
+    // Clamp the Long limit before adding 1 and before toInt: at
+    // driverEdgeLimit = Long.MaxValue the sum would wrap negative,
+    // giving limit(0), an empty probe and an empty result.
     val canon = pairs.select(
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("src"),
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("dst"))
       .distinct()
     val probe = canon
-      .limit(math.min(driverEdgeLimit + 1, Int.MaxValue.toLong).toInt)
+      .limit(math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt + 1)
       .collect()
     if (probe.length <= driverEdgeLimit) {
       val spark = pairs.sparkSession

@@ -13,8 +13,23 @@ import graft.functions.PinotFunctions
   * `CalciteSqlParser.compileToSqlNodeAndOptions` — leading
   * `SET key=value;` option statements, and the implicit `LIMIT 10`
   * default from `pinot-common/src/thrift/query.thrift:29`) on top of
-  * `spark.sql`. Everything after option parsing is stock Catalyst —
+  * `spark.sql`. Everything after the text rewrite is stock Catalyst —
   * parse/analyze/optimize/AQE replace the broker/server scatter-gather.
+  *
+  * [[rewrite]] turns a Pinot query into the text `spark.sql` runs:
+  * options are parsed off, then the passes of [[Passes]] run in this
+  * order — rlsFilters, timestampIndex, stripHints, reserved (lexical
+  * forms, virtual columns and the colliding-name renames), asOf,
+  * jsonMatch, mvDistinct, listAggMv, typeSafeCompare, exprMinMax, clp,
+  * thetaSetOps, orderBySelectExpr, mapValueShredded, geoIndexed,
+  * regexpIndexed, textMatchIndexed, reorderVectorSimilarity,
+  * vectorSimilarityIndexed, vectorSimilarity — and last the
+  * enableNullHandling choice between rewriteNullOrdering and
+  * rewriteJsonNullDefault. Every pass matches on the [[SqlLexer]] mask,
+  * in which string literals (`'…'`, `"…"`), quoted identifiers
+  * (`` `…` ``) and comments (`--`, `/* */`, hints) are blanked, and
+  * splices by offset: no pass edits inside those regions. Only
+  * stripHints removes hint comments, whole.
   */
 object QueryFacade {
 
@@ -133,7 +148,6 @@ object QueryFacade {
   /** SQL-standard Unicode string literals `U&'d\0061ta'` (Calcite
     * lexical structure; default escape char `\` + 4 hex digits).
     * Spark has no U& syntax — decode to a plain literal. */
-  private val UnicodeLiteral = """(?i)U&'((?:[^']|'')*)'""".r
   private val UnicodeEscape = """\\([0-9a-fA-F]{4})""".r
 
   /** Calcite array constructor `ARRAY [1, 2]`; Spark spells it
@@ -141,14 +155,20 @@ object QueryFacade {
   private val ArrayBracket = """(?i)\barray\s*\[([^\[\]]*)\]""".r
 
   private[graft] def rewriteLexical(stmt: String): String = {
-    val u = UnicodeLiteral.replaceAllIn(stmt, m => {
-      val decoded = UnicodeEscape.replaceAllIn(m.group(1), e =>
-        java.util.regex.Matcher.quoteReplacement(
-          Integer.parseInt(e.group(1), 16).toChar.toString))
-      java.util.regex.Matcher.quoteReplacement(s"'$decoded'")
+    val lexed = SqlLexer.lex(stmt)
+    // U& prefixes a single-quoted literal region
+    val u = SqlLexer.splice(stmt, lexed.regions.collect {
+      case r if r.kind == SqlLexer.Str && r.closed && r.start >= 2 &&
+          SqlLexer.singleQuoted(stmt.substring(r.start, r.end)) &&
+          stmt.regionMatches(true, r.start - 2, "U&", 0, 2) =>
+        val decoded = UnicodeEscape.replaceAllIn(
+          stmt.substring(r.start + 1, r.end - 1), e =>
+            java.util.regex.Matcher.quoteReplacement(
+              Integer.parseInt(e.group(1), 16).toChar.toString))
+        (r.start - 2, r.end, s"'$decoded'")
     })
-    rewriteVirtualCols(ArrayBracket.replaceAllIn(u, m =>
-      java.util.regex.Matcher.quoteReplacement(s"array(${m.group(1)})")))
+    rewriteVirtualCols(SqlLexer.replaceAll(u, ArrayBracket)(m =>
+      s"array(${m.group(1)})"))
   }
 
   /** Built-in virtual columns (`CommonConstants.Segment
@@ -157,37 +177,21 @@ object QueryFacade {
     * partition here: $docId is the row index within its partition
     * (the low 33 bits of monotonically_increasing_id), $segmentName
     * names the partition, $hostName is this host (single JVM —
-    * executors would substitute their own). */
+    * executors would substitute their own). The reference resolves
+    * them as identifiers, so text inside literals, quoted identifiers
+    * and comments stays as written. */
   private lazy val localHost =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Throwable => "localhost" }
-  // Matches a SQL string literal — single-quoted ('' or \' escapes)
-  // or double-quoted (Spark's default treats "..." as a literal, with
-  // \" escapes); virtual-column substitution must leave literal text
-  // untouched — the reference resolves $docId & co. as identifiers,
-  // not by text.
-  private val SqlStringLiteral =
-    ("'(?:[^'\\\\]|\\\\.|'')*'" + "|\"(?:[^\"\\\\]|\\\\.)*\"").r
+  private val VirtualCol = """(?i)\$(docId|segmentName|hostName)\b""".r
   private[graft] def rewriteVirtualCols(stmt: String): String =
     if (!stmt.contains("$")) stmt
-    else {
-      def sub(s: String): String = s
-        .replaceAll("(?i)\\$docId\\b",
-          "(monotonically_increasing_id() & 8589934591)")
-        .replaceAll("(?i)\\$segmentName\\b",
-          "concat('partition-', cast(spark_partition_id() as string))")
-        .replaceAll("(?i)\\$hostName\\b",
-          java.util.regex.Matcher.quoteReplacement(s"'$localHost'"))
-      // Rewrite only the regions between string literals.
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- SqlStringLiteral.findAllMatchIn(stmt)) {
-        sb.append(sub(stmt.substring(last, m.start))).append(m.matched)
-        last = m.end
-      }
-      sb.append(sub(stmt.substring(last)))
-      sb.toString
-    }
+    else SqlLexer.replaceAll(stmt, VirtualCol)(_.group(1).toLowerCase match {
+      case "docid" => "(monotonically_increasing_id() & 8589934591)"
+      case "segmentname" =>
+        "concat('partition-', cast(spark_partition_id() as string))"
+      case _ => s"'$localHost'"
+    })
 
   /** Pinot CAST target types Spark spells differently
     * (`DataTypeConversionFunctions.java` cast surface). */
@@ -201,56 +205,53 @@ object QueryFacade {
   private val CastBigDecimal =
     """(?i)\bCAST\s*\(([^()]+?)\s+AS\s+(?:BIG_)?DECIMAL\s*\)""".r
 
-  private[graft] def rewriteReserved(stmt0: String): String = {
-    val stmt = rewriteLexical(stmt0)
-    val base = ModeFn.replaceAllIn(
-      ReservedDateFn.replaceAllIn(stmt, m =>
-        (if (m.group(1).toLowerCase.endsWith("diff")) "dateDiffEpoch('"
-         else "dateAddEpoch('")),
-      "pinotmode(")
-    val withLexer = NumKeyword.replaceAllIn(base, m =>
-      java.util.regex.Matcher.quoteReplacement(s"${m.group(1)} ${m.group(2)}"))
-    val withSym = BetweenSymmetric.replaceAllIn(withLexer, m => {
-      val (a, b) = (m.group(1), m.group(2))
-      java.util.regex.Matcher.quoteReplacement(
-        s"BETWEEN least($a, $b) AND greatest($a, $b)")
-    })
-    val withExclude = rewriteExcludeWindows(withSym)
-    val withBigDec = CastBigDecimal.replaceAllIn(withExclude, m =>
-      java.util.regex.Matcher.quoteReplacement(s"bigdecimal(${m.group(1)})"))
-    val withCasts = CastTypes.replaceAllIn(withBigDec, m =>
-      m.group(1).toUpperCase match {
+  /** The lexical and colliding-name rewrites, in order. Each runs on
+    * the mask, so names inside literals, quoted identifiers and
+    * comments stay as written. */
+  private[graft] def rewriteReserved(stmt: String): String = {
+    def sub(re: scala.util.matching.Regex)(f: SqlLexer.Hit => String)
+        : String => String = SqlLexer.replaceAll(_, re)(f)
+    Seq[String => String](
+      rewriteLexical,
+      sub(ReservedDateFn)(m =>
+        if (m.group(1).toLowerCase.endsWith("diff")) "dateDiffEpoch('"
+        else "dateAddEpoch('"),
+      sub(ModeFn)(_ => "pinotmode("),
+      sub(NumKeyword)(m => s"${m.group(1)} ${m.group(2)}"),
+      sub(BetweenSymmetric) { m =>
+        val (a, b) = (m.group(1), m.group(2))
+        s"BETWEEN least($a, $b) AND greatest($a, $b)"
+      },
+      rewriteExcludeWindows,
+      sub(CastBigDecimal)(m => s"bigdecimal(${m.group(1)})"),
+      sub(CastTypes)(_.group(1).toUpperCase match {
         case "BIG_DECIMAL" => "AS DECIMAL(38,18))"
         case "VARCHAR" => "AS STRING)"
         case _ => "AS BINARY)"
-      })
-    val withColliding = ToTimestampFn.replaceAllIn(
-      CollidingFns.replaceAllIn(withCasts, m =>
-        s"pinot${m.group(1).toLowerCase}("),
-      "totimestamp(")
-    val withConcat = BitScalarFn.replaceAllIn(
-      ConcatFn.replaceAllIn(withColliding, "pinotconcat("),
-      m => s"bit${m.group(1).toLowerCase}(")
-    UnorderedRowNumber.replaceAllIn(withConcat, m => {
-      val spec = m.group(1)
-      if (spec.toLowerCase.contains("order by"))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val sep = if (spec.trim.isEmpty) "" else spec.trim + " "
-        java.util.regex.Matcher.quoteReplacement(
-          s"row_number() OVER ($sep ORDER BY 'arbitrary')")
+      }),
+      sub(CollidingFns)(m => s"pinot${m.group(1).toLowerCase}("),
+      sub(ToTimestampFn)(_ => "totimestamp("),
+      sub(ConcatFn)(_ => "pinotconcat("),
+      sub(BitScalarFn)(m => s"bit${m.group(1).toLowerCase}("),
+      sub(UnorderedRowNumber) { m =>
+        val spec = m.group(1)
+        if (m.masked(1).toLowerCase.contains("order by")) m.matched
+        else {
+          val sep = if (spec.trim.isEmpty) "" else spec.trim + " "
+          s"row_number() OVER ($sep ORDER BY 'arbitrary')"
+        }
       }
-    })
+    ).foldLeft(stmt)((s, pass) => pass(s))
   }
 
   /** Pinot hint comments (slash-star-plus `aggOptions(k='v')` blocks,
     * `PinotHintOptions.java`) carry key='value' pairs Spark's hint
     * grammar rejects; they are execution hints with no semantic
     * content, so the facade drops them. */
-  private val HintComment = """(?s)/\*\+.*?\*/""".r
-
   private[graft] def stripHints(stmt: String): String =
-    HintComment.replaceAllIn(stmt, " ")
+    SqlLexer.splice(stmt, SqlLexer.lex(stmt).regions.collect {
+      case r if r.kind == SqlLexer.Hint && r.closed => (r.start, r.end, " ")
+    })
 
   /** `BETWEEN SYMMETRIC a AND b` (Calcite): bounds in either order. */
   private val BetweenSymmetric =
@@ -282,7 +283,7 @@ object QueryFacade {
     """(?i)ROWS\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND\s+UNBOUNDED\s+FOLLOWING\s*$""".r
 
   private def rewriteExcludeValueFns(stmt: String): String =
-    ExcludeWindowV.replaceAllIn(stmt, m => {
+    SqlLexer.replaceAll(stmt, ExcludeWindowV) { m =>
       val fn = m.group(1).toUpperCase
       val x = m.group(2).trim
       val spec = m.group(3).trim
@@ -334,12 +335,12 @@ object QueryFacade {
           }
           case _ => None
         }
-      java.util.regex.Matcher.quoteReplacement(res.getOrElse(m.matched))
-    })
+      res.getOrElse(m.matched)
+    }
 
   private[graft] def rewriteExcludeWindows(stmt0: String): String = {
     val stmt = rewriteExcludeValueFns(stmt0)
-    ExcludeWindow.replaceAllIn(stmt, m => {
+    SqlLexer.replaceAll(stmt, ExcludeWindow) { m =>
       val agg = m.group(1).toUpperCase
       val e = m.group(2).trim
       val spec = m.group(3).trim
@@ -357,7 +358,7 @@ object QueryFacade {
       // SUM over an empty remaining set must be NULL, not 0
       def sumOrNull(total: String, remaining: String) =
         s"(CASE WHEN $remaining = 0 THEN NULL ELSE $total END)"
-      val res = (agg, mode) match {
+      (agg, mode) match {
         case (_, "NO OTHERS") => s"$agg($e) $whole"
         case ("SUM", "CURRENT ROW") =>
           sumOrNull(s"${sum(whole)} - $curSum", s"${cnt(whole)} - $curCnt")
@@ -382,8 +383,7 @@ object QueryFacade {
           s"(CASE WHEN $c2 = 0 THEN NULL ELSE CAST($s2 AS DOUBLE) / $c2 END)"
         case _ => m.matched
       }
-      java.util.regex.Matcher.quoteReplacement(res)
-    })
+    }
   }
 
   /** Pinot ASOF JOIN SQL surface (`AsofJoinOperator.java:37`,
@@ -402,15 +402,20 @@ object QueryFacade {
   private val CmpOp = """(>=|<=|>|<)""".r
 
   private[graft] def rewriteAsOf(stmt: String): String = {
-    val m = AsOfPattern.findFirstMatchIn(stmt).getOrElse(return stmt)
-    val left = m.group(1)
+    // table names may be quoted identifiers: match on the mask that
+    // keeps them readable
+    val lexed = SqlLexer.lex(stmt)
+    val m = AsOfPattern.findAllMatchIn(lexed.identMask)
+      .find(m => !lexed.inIdent(m.start)).getOrElse(return stmt)
+    def group(i: Int) = stmt.substring(m.start(i), m.end(i))
+    val left = group(1)
     val isLeft = m.group(2) != null
-    val right = m.group(3)
-    val mc = m.group(4).trim
-    val on = Option(m.group(6)).map(_.trim).getOrElse(return stmt)
-    if ((mc.toUpperCase.contains(" AND ") || mc.toUpperCase.contains(" OR ")) ||
-        mc.contains("!=")) return stmt
-    val ops = CmpOp.findAllMatchIn(mc).toSeq
+    val right = group(3)
+    val (mcMask, mc) = (m.group(4), group(4))
+    val on = Option(m.group(6)).map(_ => group(6).trim).getOrElse(return stmt)
+    if ((mcMask.toUpperCase.contains(" AND ") || mcMask.toUpperCase.contains(" OR ")) ||
+        mcMask.contains("!=")) return stmt
+    val ops = CmpOp.findAllMatchIn(mcMask).toSeq
     if (ops.size != 1) return stmt
     val op = ops.head
     val lhs = mc.substring(0, op.start).trim
@@ -427,7 +432,7 @@ object QueryFacade {
     val joinKw = if (isLeft) "LEFT OUTER JOIN LATERAL" else "JOIN LATERAL"
     val onKw = if (isLeft) " ON TRUE" else ""
     stmt.substring(0, m.start) +
-      s"FROM $left $joinKw (SELECT * FROM $right WHERE ($on) AND ($mc) " +
+      s"FROM $left $joinKw (SELECT * FROM $right WHERE ($on) AND (${mc.trim}) " +
       s"ORDER BY $rexpr $dir LIMIT 1) $right$onKw"
   }
 
@@ -509,17 +514,17 @@ object QueryFacade {
     val pat = ("""(?is)\b(from|join)\s+(""" + ref +
       """)(\s+(?:as\s+)?([A-Za-z_]\w*|`[^`]+`))?""").r
     var n = 0
-    val out = pat.replaceAllIn(stmt, m => {
+    // table references may be quoted identifiers: keep them readable
+    val out = SqlLexer.replaceAll(stmt, pat, idents = true) { m =>
       val kw = m.group(1)
       val orig = m.group(2)
       val alias = Option(m.group(4)).filterNot(a =>
         SqlKeywords(a.stripPrefix("`").stripSuffix("`").toLowerCase))
       val as = alias.getOrElse(table)
       n += 1
-      java.util.regex.Matcher.quoteReplacement(
-        s"$kw (SELECT * FROM $orig WHERE $pred) $as") +
+      s"$kw (SELECT * FROM $orig WHERE $pred) $as" +
         (if (alias.isEmpty && m.group(3) != null) m.group(3) else "")
-    })
+    }
     (out, n)
   }
 
@@ -717,27 +722,11 @@ object QueryFacade {
     val m = """(?is)^\s*AND\s+""".r.findFirstMatchIn(tail)
       .getOrElse(return None)
     val rest = tail.substring(m.end)
-    val lower = rest.toLowerCase
-    val terms = Seq("group by", "order by", "limit ", "limit\n", "having ",
-      "union", "intersect", "except", ";")
-    var depth = 0
-    var i = 0
-    var end = rest.length
-    while (i < rest.length && end == rest.length) {
-      rest.charAt(i) match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' =>
-          depth -= 1
-          if (depth < 0) end = i // closing an enclosing paren
-        case _ if depth == 0 =>
-          if (terms.exists(t => lower.startsWith(t, i))) end = i
-        case _ =>
-      }
-      i += 1
-    }
-    val s = rest.substring(0, end).trim
+    val s = rest.substring(0,
+      SqlLexer.clauseEnd(SqlLexer.mask(rest), 0, ConjunctsEnd)).trim
     if (s.isEmpty) None else Some(s)
   }
+  private val ConjunctsEnd = (SqlLexer.ClauseTail.regex + "|;").r
 
   /** Index-served rewrite pass: runs before the text-only rewrite and
     * handles occurrences whose (table, column) has a registered index
@@ -746,44 +735,12 @@ object QueryFacade {
     * reference's behavior when a vector index is configured. */
   private[graft] def rewriteVectorSimilarityIndexed(
       spark: SparkSession, stmt: String): String = {
-    val m = VsimPattern.findFirstMatchIn(stmt).getOrElse(return stmt)
+    val (m, close, args) = vsimCall(stmt).getOrElse(return stmt)
     val isRadius = m.group(3) != null
     val table = m.group(2)
-    val open = m.end - 1
-    var depth = 0
-    var i = open
-    var close = -1
-    while (i < stmt.length && close < 0) {
-      stmt.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
-    if (close < 0) return stmt
-    // balanced top-level comma split (the probe vector may be
-    // `array(...)` after the lexical rewrite, or `ARRAY[...]`)
-    val args = {
-      val out = Seq.newBuilder[String]
-      var d = 0
-      var last = open + 1
-      var j = open + 1
-      while (j < close) {
-        stmt.charAt(j) match {
-          case '(' | '[' => d += 1
-          case ')' | ']' => d -= 1
-          case ',' if d == 0 =>
-            out += stmt.substring(last, j)
-            last = j + 1
-          case _ =>
-        }
-        j += 1
-      }
-      out += stmt.substring(last, close)
-      out.result().map(_.trim)
-    }
-    if (args.length != 3) return stmt
+    // the probe vector may be `array(...)` after the lexical rewrite,
+    // or `ARRAY[...]`
+    if (close < 0 || args.length != 3) return stmt
     val Seq(vcol, vec, kStr) = args
     val entry = VectorIndexes.lookup(table, vcol).getOrElse(return stmt)
     val probe = parseVectorLiteral(vec).getOrElse(return stmt)
@@ -929,8 +886,7 @@ object QueryFacade {
       if (ids.isEmpty) s"${entry.idCol} IS NULL AND FALSE"
       else s"${entry.idCol} IN (${ids.mkString(", ")})"
     rewriteVectorSimilarityIndexed(spark,
-      stmt.substring(0, m.start) + m.group(1) + s"($inList)" +
-        stmt.substring(close + 1))
+      stmt.substring(0, m.end(1)) + s"($inList)" + stmt.substring(close + 1))
   }
 
   // ---- text-index-served TEXT_MATCH ----
@@ -1065,7 +1021,7 @@ object QueryFacade {
   private[graft] def rewriteMapValueShredded(spark: SparkSession,
       stmt: String): String = {
     if (!stmt.toLowerCase.contains("mapvalue")) return stmt
-    MapValueCall.replaceAllIn(stmt, m => {
+    SqlLexer.replaceAll(stmt, MapValueCall) { m =>
       val colRef = m.group(1)
       val bare = colRef.substring(colRef.lastIndexOf('.') + 1)
       val key = m.group(2).replace("''", "'")
@@ -1077,14 +1033,14 @@ object QueryFacade {
               qual.map(q => s"$q.$shredCol").getOrElse(shredCol)
           }
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
+      served.getOrElse(m.matched)
+    }
   }
 
   private[graft] def rewriteTextMatchIndexed(spark: SparkSession,
       stmt: String): String = {
     if (!stmt.toLowerCase.contains("text_match")) return stmt
-    TextMatchCall.replaceAllIn(stmt, m => {
+    SqlLexer.replaceAll(stmt, TextMatchCall) { m =>
       val colRef = m.group(1)
       val bare = colRef.substring(colRef.lastIndexOf('.') + 1)
       // the column's CONFIGURED analyzer rides the registration
@@ -1156,9 +1112,8 @@ object QueryFacade {
           }
           }
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(
-        served.orElse(fallbackRewrite).getOrElse(m.matched))
-    })
+      served.orElse(fallbackRewrite).getOrElse(m.matched)
+    }
   }
 
   // ---- REGEXP_LIKE / LIKE served from the value-dictionary index ----
@@ -1178,7 +1133,7 @@ object QueryFacade {
   // keep NULL semantics through CASE.
   private val RegexpLikeCall =
     ("""(?is)\bregexp_like\s*\(\s*(\w+(?:\.\w+)?)\s*,\s*""" +
-      """('(?:[^']|'')*')\s*(?:,\s*'([a-zA-Z])'\s*)?\)""").r
+      """('(?:[^']|'')*')\s*(?:,\s*'([^']*)'\s*)?\)""").r
   private val LikePredPattern =
     ("""(?is)\b(\w+(?:\.\w+)?)\s+(not\s+)?like\s+""" +
       """('(?:[^']|'')*')(?!\s*(?i:escape)\b)""").r
@@ -1198,65 +1153,6 @@ object QueryFacade {
   // single-source statement with the MV columns as bare identifiers;
   // anything else keeps Spark semantics untouched.
 
-  /** Blank out quoted-literal contents (same length) so clause-keyword
-    * scans can't match inside strings. */
-  private def maskLiterals(s: String): String = {
-    val sb = new StringBuilder(s)
-    var i = 0
-    var in = false
-    while (i < sb.length) {
-      if (sb.charAt(i) == '\'') in = !in
-      else if (in) sb.setCharAt(i, ' ')
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Split on commas at paren-depth 0 outside string literals. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var in = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => in = !in
-        case '(' if !in => depth += 1
-        case ')' if !in => depth -= 1
-        case ',' if !in && depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** First top-level (paren-depth-0, outside literals) occurrence of a
-    * keyword in MASKED text; -1 when absent. */
-  private def findTopLevel(masked: String, kw: String, from: Int = 0): Int = {
-    val lower = masked.toLowerCase
-    var depth = 0
-    var i = 0
-    while (i < lower.length) {
-      lower.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
-          if (depth == 0 && i >= from && lower.startsWith(kw, i) &&
-              (i == 0 || !wordChar(lower.charAt(i - 1))) &&
-              (i + kw.length >= lower.length ||
-                !wordChar(lower.charAt(i + kw.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** Calcite resolves an ORDER BY expression by syntactic match against
     * the select list (`SqlValidatorImpl.expandOrderExpr`):
     * `SELECT DISTINCT ADD(a, b), s … ORDER BY s DESC, ADD(a, b)` orders
@@ -1267,15 +1163,15 @@ object QueryFacade {
     * normalized text equals a select item's expression is replaced by
     * that item's 1-based ordinal (SQL-standard, spelling-proof). */
   private[graft] def rewriteOrderBySelectExpr(stmt: String): String = try {
-    val masked = maskLiterals(stmt)
+    val masked = SqlLexer.mask(stmt)
     val low = masked.toLowerCase
     val sel0 = low.indexOf("select")
     if (sel0 < 0 || low.indexOf("select", sel0 + 1) >= 0) return stmt
-    val ob = findTopLevel(masked, "order")
+    val ob = SqlLexer.findTopLevel(masked, "order")
     if (ob < 0) return stmt
     val by = masked.indexWhere(!_.isWhitespace, ob + 5)
     if (by < 0 || !masked.regionMatches(true, by, "by", 0, 2)) return stmt
-    val fromIdx = findTopLevel(masked, "from")
+    val fromIdx = SqlLexer.findTopLevel(masked, "from")
     if (fromIdx < 0 || fromIdx > ob) return stmt
     val selBodyStart = {
       val afterSel = sel0 + "select".length
@@ -1283,19 +1179,19 @@ object QueryFacade {
         .findFirstMatchIn(masked.substring(afterSel))
       afterSel + m.map(_.end).getOrElse(0)
     }
-    val selectItems = splitTopLevel(stmt.substring(selBodyStart, fromIdx))
+    val selectItems = SqlLexer.splitTopLevel(stmt.substring(selBodyStart, fromIdx))
     def norm(s: String): String = s.toLowerCase.replaceAll("\\s+", "")
     // expression text of each select item (alias stripped)
     val selExprs = selectItems.map(it =>
       norm("""(?is)\s+as\s+\S+\s*$""".r.replaceAllIn(it, "")))
     val obEnd = {
-      val lim = findTopLevel(masked, "limit", ob)
+      val lim = SqlLexer.findTopLevel(masked, "limit", ob)
       if (lim < 0) stmt.length else lim
     }
     val obBody = stmt.substring(by + 2, obEnd)
     val Dir = """(?is)(\s+(?:asc|desc))?(\s+nulls\s+(?:first|last))?\s*$""".r
     var changed = false
-    val newItems = splitTopLevel(obBody).map { item =>
+    val newItems = SqlLexer.splitTopLevel(obBody).map { item =>
       val dirM = Dir.findFirstMatchIn(item)
       val core = dirM.map(m => item.substring(0, m.start)).getOrElse(item)
       val suffix = dirM.map(_.matched.trim).filter(_.nonEmpty)
@@ -1334,7 +1230,7 @@ object QueryFacade {
     * aggregate. Distinct keeps first-occurrence order, as upstream. */
   private[graft] def rewriteListAggMv(spark: SparkSession,
       stmt: String): String = try {
-    val masked = maskLiterals(stmt)
+    val masked = SqlLexer.mask(stmt)
     val low = masked.toLowerCase
     if (!low.contains("listagg") && !low.contains("arrayagg") &&
       !low.contains("array_agg")) return stmt
@@ -1346,51 +1242,33 @@ object QueryFacade {
     def isMv(colName: String): Boolean = schema.fields.exists(f =>
       f.name.equalsIgnoreCase(colName) &&
         f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-    // match on the MASKED text (so listagg(...)-shaped text inside a
-    // string literal never rewrites) and splice replacements into the
-    // original statement by offset, as rewriteTypeSafeCompare does —
-    // maskLiterals is length-preserving, so offsets line up
-    val out = new StringBuilder
-    var last = 0
-    for (m <- ListAggCall.findAllMatchIn(masked)) {
+    val s1 = SqlLexer.replaceAll(stmt, ListAggCall) { m =>
       val colName = m.group(1)
-      val sep = stmt.substring(m.start(2), m.end(2))
-      val distinct = Option(m.group(3)).exists(_.equalsIgnoreCase("true"))
       val mv = isMv(colName)
-      val repl =
-        if (!mv && m.group(3) == null)
-          stmt.substring(m.start, m.end) // native 2-arg listagg
-        else {
-          val inner =
-            if (mv) s"flatten(collect_list(`$colName`))"
-            else s"collect_list(CAST(`$colName` AS STRING))"
-          val deduped = if (distinct) s"array_distinct($inner)" else inner
-          s"array_join($deduped, $sep)"
-        }
-      out.append(stmt.substring(last, m.start)).append(repl)
-      last = m.end
+      if (!mv && m.group(3) == null) m.matched // native 2-arg listagg
+      else {
+        val inner =
+          if (mv) s"flatten(collect_list(`$colName`))"
+          else s"collect_list(CAST(`$colName` AS STRING))"
+        val distinct = Option(m.group(3)).exists(_.equalsIgnoreCase("true"))
+        val deduped = if (distinct) s"array_distinct($inner)" else inner
+        s"array_join($deduped, ${m.group(2)})"
+      }
     }
-    val s1 =
-      if (last == 0) stmt else { out.append(stmt.substring(last)); out.toString }
     // ARRAYAGG over a multi-value column flattens too — the reference's
     // ArrayAgg*Function walks the MV values per doc
     // (`ArrayAggMvQueriesTest.java:120-165`: non-distinct length is
     // replicas × values-per-row × rows, distinct collapses to the value
     // universe). Scalar columns keep the registered aggregate.
-    val masked2 = maskLiterals(s1)
-    val out2 = new StringBuilder
-    var last2 = 0
-    for (m <- ArrayAggCall.findAllMatchIn(masked2)) {
+    SqlLexer.replaceAll(s1, ArrayAggCall) { m =>
       val colName = m.group(1)
-      if (isMv(colName)) {
+      if (!isMv(colName)) m.matched
+      else {
         val distinct = Option(m.group(2)).exists(_.equalsIgnoreCase("true"))
         val inner = s"flatten(collect_list(`$colName`))"
-        out2.append(s1.substring(last2, m.start))
-          .append(if (distinct) s"array_distinct($inner)" else inner)
-        last2 = m.end
+        if (distinct) s"array_distinct($inner)" else inner
       }
     }
-    if (last2 == 0) s1 else { out2.append(s1.substring(last2)); out2.toString }
   } catch { case scala.util.control.NonFatal(_) => stmt }
 
   private val ColCompare =
@@ -1405,7 +1283,7 @@ object QueryFacade {
     * malformed cast, so the string side rewrites to try_cast(...). */
   private[graft] def rewriteTypeSafeCompare(spark: SparkSession,
       stmt: String): String = try {
-    val masked = maskLiterals(stmt)
+    val masked = SqlLexer.mask(stmt)
     val low = masked.toLowerCase
     // conservative: one SELECT, one FROM table, no joins — qualified
     // identifiers and join conditions stay untouched
@@ -1422,22 +1300,15 @@ object QueryFacade {
         case org.apache.spark.sql.types.StringType => 's'
         case _ => 'o'
       })
-    val out = new StringBuilder
-    var last = 0
-    for (m <- ColCompare.findAllMatchIn(masked)) {
+    SqlLexer.replaceAll(stmt, ColCompare) { m =>
       (kind(m.group(1)), kind(m.group(3))) match {
         case (Some('n'), Some('s')) =>
-          out.append(stmt.substring(last, m.start))
-          out.append(s"${m.group(1)} ${m.group(2)} TRY_CAST(`${m.group(3)}` AS DOUBLE)")
-          last = m.end
+          s"${m.group(1)} ${m.group(2)} TRY_CAST(`${m.group(3)}` AS DOUBLE)"
         case (Some('s'), Some('n')) =>
-          out.append(stmt.substring(last, m.start))
-          out.append(s"TRY_CAST(`${m.group(1)}` AS DOUBLE) ${m.group(2)} ${m.group(3)}")
-          last = m.end
-        case _ =>
+          s"TRY_CAST(`${m.group(1)}` AS DOUBLE) ${m.group(2)} ${m.group(3)}"
+        case _ => m.matched
       }
     }
-    if (last == 0) stmt else { out.append(stmt.substring(last)); out.toString }
   } catch { case scala.util.control.NonFatal(_) => stmt }
 
   private val ExprMinMaxShape =
@@ -1467,7 +1338,7 @@ object QueryFacade {
     * registration. */
   private[graft] def rewriteExprMinMax(stmt: String,
       columnsOf: String => Option[Seq[String]] = _ => None): String = try {
-    if (!maskLiterals(stmt).toLowerCase.contains("expr")) stmt
+    if (!SqlLexer.mask(stmt).toLowerCase.contains("expr")) stmt
     else rewriteExprMinMaxBlocks(stmt, columnsOf)
   } catch { case scala.util.control.NonFatal(_) => stmt }
 
@@ -1478,57 +1349,33 @@ object QueryFacade {
     * rewrite at any depth) are kept verbatim. */
   private def rewriteExprMinMaxBlocks(stmt: String,
       columnsOf: String => Option[Seq[String]] = _ => None): String = {
-    val masked = maskLiterals(stmt)
-    val out = new StringBuilder
-    var last = 0
-    var depth = 0
-    var start = -1
-    var i = 0
-    while (i < stmt.length) {
-      masked.charAt(i) match {
-        case '(' =>
-          if (depth == 0) start = i
-          depth += 1
-        case ')' if depth > 0 =>
-          depth -= 1
-          if (depth == 0) {
-            val innerMasked = masked.substring(start + 1, i).toLowerCase
-            val inner = stmt.substring(start + 1, i)
-            out.append(stmt.substring(last, start + 1))
-            out.append(
-              if (innerMasked.contains("select") && innerMasked.contains("expr"))
-                rewriteExprMinMaxBlocks(inner, columnsOf)
-              else inner)
-            last = i
-          }
-        case _ =>
+    val masked = SqlLexer.mask(stmt)
+    val groups = SqlLexer.topLevel(masked, OpenParen)
+      .map(m => (m.start + 1, SqlLexer.closing(masked, m.start)))
+      .filter { case (from, to) =>
+        val inner = if (to < 0) "" else masked.substring(from, to).toLowerCase
+        inner.contains("select") && inner.contains("expr")
       }
-      i += 1
-    }
-    out.append(stmt.substring(last))
-    rewriteExprMinMaxOneBlock(out.toString, columnsOf)
+    rewriteExprMinMaxOneBlock(SqlLexer.splice(stmt, groups.map { case (from, to) =>
+      (from, to, rewriteExprMinMaxBlocks(stmt.substring(from, to), columnsOf))
+    }.toSeq), columnsOf)
   }
+  private val OpenParen = """\(""".r
 
   /** Blank paren-group interiors (length-preserving) so clause-keyword
     * scans see only the block's own top-level FROM/WHERE/GROUP/ORDER. */
   private def blankParens(masked: String): String = {
-    val sb = new StringBuilder(masked)
-    var depth = 0
-    var i = 0
-    while (i < sb.length) {
-      sb.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => if (depth > 0) depth -= 1
-        case _ => if (depth > 0) sb.setCharAt(i, ' ')
-      }
-      i += 1
+    val cs = masked.toCharArray
+    SqlLexer.topLevel(masked, OpenParen).foreach { m =>
+      val close = SqlLexer.closing(masked, m.start)
+      java.util.Arrays.fill(cs, m.start + 1, if (close < 0) cs.length else close, ' ')
     }
-    sb.toString
+    new String(cs)
   }
 
   private def rewriteExprMinMaxOneBlock(stmt: String,
       columnsOf: String => Option[Seq[String]]): String = try {
-    val masked = maskLiterals(stmt)
+    val masked = SqlLexer.mask(stmt)
     val low = masked.toLowerCase
     if (!low.contains("expr")) return stmt
     // clause slicing keys off the block's own top level only — a
@@ -1543,7 +1390,7 @@ object QueryFacade {
     val m = ExprMinMaxShape.findFirstMatchIn(shaped).getOrElse(return stmt)
     def slice(i: Int): String =
       if (m.group(i) == null) "" else stmt.substring(m.start(i), m.end(i))
-    val items = splitTopLevel(slice(1)).map(_.trim)
+    val items = SqlLexer.splitTopLevel(slice(1)).map(_.trim)
     val table = m.group(2)
     val (whereC, groupC, orderC, limitC) =
       (slice(3), slice(4), slice(5), slice(6))
@@ -1553,7 +1400,7 @@ object QueryFacade {
     val exprTexts = exprItems.map(_._1).toSet
     val groupKeys =
       if (groupC.isEmpty) Nil
-      else splitTopLevel(groupC.replaceAll("(?is)^\\s+GROUP\\s+BY", "")).map(_.trim)
+      else SqlLexer.splitTopLevel(groupC.replaceAll("(?is)^\\s+GROUP\\s+BY", "")).map(_.trim)
     if (!groupKeys.forall(k => BareIdent.findFirstIn(k).contains(k))) return stmt
     val groupLow = groupKeys.map(_.toLowerCase).toSet
     // non-expr items: bare group keys pass through; anything else is a
@@ -1569,7 +1416,7 @@ object QueryFacade {
     def callParts(call: scala.util.matching.Regex.Match)
         : Option[(String, String, Seq[String], String)] = {
       val kind = call.group(1).toLowerCase
-      val args = splitTopLevel(call.group(2)).map(_.trim)
+      val args = SqlLexer.splitTopLevel(call.group(2)).map(_.trim)
       if (args.size < 2) None
       else Some((kind, args.head, args.tail,
         Option(call.group(3)).getOrElse(
@@ -1681,8 +1528,8 @@ object QueryFacade {
     // silently change results.
     val srcCols: String = columnsOf(table) match {
       case Some(cols) if cols.forall(c => BareIdent.findFirstIn(c).contains(c)) =>
-        val scanText = maskLiterals(
-          (exprItems.map(_._1) ++ others ++ keys).mkString(" "))
+        val scanText = SqlLexer.lex(
+          (exprItems.map(_._1) ++ others ++ keys).mkString(" ")).identMask
         val words = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(scanText)
           .map(_.toLowerCase).toSet
         val needed = cols.filter(c => words.contains(c.toLowerCase))
@@ -1730,14 +1577,14 @@ object QueryFacade {
     // text survives as-is (`x AS n` keeps n); a bare aggregate gets
     // the reference's rendering — its own text, whitespace-collapsed
     val OtherAs = """(?is)^(.*?)\s+AS\s+(`[^`]+`|\S+)\s*$""".r
-    def otherAlias(o: String): String = maskLiterals(o) match {
+    def otherAlias(o: String): String = SqlLexer.mask(o) match {
       case OtherAs(_, a) => o.substring(o.length - a.length)
       case _ => s"`${o.replaceAll("\\s+", "")}`"
     }
     // the bare expression: an item's own `AS alias` must be stripped
     // before re-aliasing inside the CTE, or the emitted SQL carries
     // two AS clauses
-    def otherExpr(o: String): String = maskLiterals(o) match {
+    def otherExpr(o: String): String = SqlLexer.mask(o) match {
       case OtherAs(e, _) => o.substring(0, e.length)
       case _ => o
     }
@@ -1802,8 +1649,8 @@ object QueryFacade {
     val rawLow = stmt.toLowerCase
     if (!rawLow.contains("clpmatch") && !rawLow.contains("clpdecode"))
       return stmt
-    val masked = maskLiterals(stmt)
-    val out = new StringBuilder
+    val masked = SqlLexer.mask(stmt)
+    val edits = Seq.newBuilder[(Int, Int, String)]
     var last = 0
     def ident(a: String): Option[String] = a.trim match {
       case ClpIdent(bt, dq, bare) =>
@@ -1813,19 +1660,9 @@ object QueryFacade {
     for (m <- ClpCallOpen.findAllMatchIn(masked)) if (m.start >= last) {
       val isMatch = m.group(1).equalsIgnoreCase("clpmatch")
       val open = m.end - 1
-      var depth = 0
-      var i = open
-      var close = -1
-      while (i < masked.length && close < 0) {
-        masked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
+      val close = SqlLexer.closing(masked, open)
       if (close > 0) {
-        val args = splitTopLevel(stmt.substring(open + 1, close))
+        val args = SqlLexer.splitTopLevel(stmt.substring(open + 1, close))
         def triple(g: String): (String, String, String) =
           (s"`${g}_logtype`", s"`${g}_dictionaryVars`", s"`${g}_encodedVars`")
         val repl: Option[String] =
@@ -1853,7 +1690,7 @@ object QueryFacade {
               case _ => None
             }
             cols.map { case (lt, dv, ev, wq) =>
-              val raw = unescapeSqlLiteral(wq)
+              val raw = SqlLexer.unescapeSqlLiteral(wq)
               if (raw.isEmpty) s"$lt = ''"
               else {
                 // candidate/re-verify split (ClpRewriter.java:293-345
@@ -1887,25 +1724,20 @@ object QueryFacade {
             }
           }
         repl.foreach { r =>
-          out.append(stmt.substring(last, m.start)).append(r)
+          edits += ((m.start, close + 1, r))
           last = close + 1
         }
       }
     }
-    if (last == 0) stmt else { out.append(stmt.substring(last)); out.toString }
+    SqlLexer.splice(stmt, edits.result())
   } catch { case scala.util.control.NonFatal(_) => stmt }
 
   private val JsonNullDefault =
     ("(?i)\\b(jsonextractscalar|jsonextractindex)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*," +
-      "\\s*('[^']*')\\s*,\\s*'(int|long|float|double|boolean|timestamp)'\\s*,\\s*null\\s*\\)").r
+      "\\s*('[^']*')\\s*,\\s*'([^']*)'\\s*,\\s*null\\s*\\)").r
+  private val JsonNullTypes =
+    Set("int", "long", "float", "double", "boolean", "timestamp")
 
-  /** With null handling DISABLED (the reference's default), a `null`
-    * defaultValue literal in jsonExtractScalar degrades to the type's
-    * ZERO default — `JsonExtractScalarTransformFunction.java:202-208`
-    * gates `_defaultIsNull` on `_nullHandlingEnabled`, so the null
-    * literal's numeric accessor (0 / 0.0 / false) becomes the fill
-    * value. Applied only when the option is off; the null-handling
-    * path keeps the SQL NULL. */
   private val ThetaCallOpen =
     """(?i)\bdistinct_?count_?(raw_?)?theta_?sketch\s*\(""".r
   private val SetRef = """\$([1-9]\d*)""".r
@@ -1928,28 +1760,17 @@ object QueryFacade {
   private[graft] def rewriteThetaSetOps(stmt: String): String = try {
     val rawLow = stmt.toLowerCase
     if (!rawLow.contains("theta") || !rawLow.contains("set_")) return stmt
-    val masked = maskLiterals(stmt)
-    val out = new StringBuilder
+    val masked = SqlLexer.mask(stmt)
+    val edits = Seq.newBuilder[(Int, Int, String)]
     var last = 0
     for (m <- ThetaCallOpen.findAllMatchIn(masked)) if (m.start >= last) {
       val open = m.end - 1
-      var depth = 0
-      var i = open
-      var close = -1
-      while (i < masked.length && close < 0) {
-        masked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
+      val close = SqlLexer.closing(masked, open)
       if (close > 0) {
-        val args = splitTopLevel(stmt.substring(open + 1, close))
+        val args = SqlLexer.splitTopLevel(stmt.substring(open + 1, close))
         def lit(s: String): Option[String] = {
           val t = s.trim
-          if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-            Some(unescapeSqlLiteral(t))
+          if (SqlLexer.singleQuoted(t)) Some(SqlLexer.unescapeSqlLiteral(t))
           else None
         }
         val setExpr = if (args.size >= 4) lit(args.last).filter(
@@ -1981,29 +1802,39 @@ object QueryFacade {
             val isRaw = m.group(1) != null
             val repl =
               if (isRaw) composed else s"GETTHETASKETCHESTIMATE($composed)"
-            out.append(stmt.substring(last, m.start)).append(repl)
+            edits += ((m.start, close + 1, repl))
             last = close + 1
           case None => ()
         }
       }
     }
-    if (last == 0) stmt else { out.append(stmt.substring(last)); out.toString }
+    SqlLexer.splice(stmt, edits.result())
   } catch { case scala.util.control.NonFatal(_) => stmt }
 
+  /** With null handling DISABLED (the reference's default), a `null`
+    * defaultValue literal in jsonExtractScalar degrades to the type's
+    * ZERO default — `JsonExtractScalarTransformFunction.java:202-208`
+    * gates `_defaultIsNull` on `_nullHandlingEnabled`, so the null
+    * literal's numeric accessor (0 / 0.0 / false) becomes the fill
+    * value. Applied only when the option is off; the null-handling
+    * path keeps the SQL NULL. */
   private[graft] def rewriteJsonNullDefault(stmt: String): String =
-    JsonNullDefault.replaceAllIn(stmt, m => {
-      val zero = m.group(4).toLowerCase match {
-        case "float" | "double" => "0.0"
-        case "boolean" => "false"
-        case _ => "0"
+    SqlLexer.replaceAll(stmt, JsonNullDefault) { m =>
+      val tpe = m.group(4).toLowerCase
+      if (!JsonNullTypes(tpe)) m.matched
+      else {
+        val zero = tpe match {
+          case "float" | "double" => "0.0"
+          case "boolean" => "false"
+          case _ => "0"
+        }
+        s"${m.group(1)}(${m.group(2)}, ${m.group(3)}, '${m.group(4)}', $zero)"
       }
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)}(${m.group(2)}, ${m.group(3)}, '${m.group(4)}', $zero)")
-    })
+    }
 
   private[graft] def rewriteMvDistinct(spark: SparkSession,
       stmt: String): String = try {
-    val masked = maskLiterals(stmt)
+    val masked = SqlLexer.mask(stmt)
     val low = masked.toLowerCase
     // one SELECT only (no subqueries), and something to flatten
     if (low.indexOf("select", low.indexOf("select") + 1) >= 0) return stmt
@@ -2011,7 +1842,7 @@ object QueryFacade {
     def slice(i: Int): String =
       if (m.group(i) == null) "" else stmt.substring(m.start(i), m.end(i))
     val isDistinct = m.group(1) != null
-    val items = splitTopLevel(slice(2))
+    val items = SqlLexer.splitTopLevel(slice(2))
     val table = m.group(3)
     val (whereC, groupC, orderC, limitC) =
       (slice(4), slice(5), slice(6), slice(7))
@@ -2022,7 +1853,7 @@ object QueryFacade {
     val distinctLike =
       if (isDistinct && groupC.isEmpty) true
       else if (!isDistinct && groupC.nonEmpty) {
-        val gl = splitTopLevel(groupC.replaceAll("(?is)^\\s+GROUP\\s+BY", ""))
+        val gl = SqlLexer.splitTopLevel(groupC.replaceAll("(?is)^\\s+GROUP\\s+BY", ""))
         items.forall(BareIdent.findFirstIn(_).isDefined) &&
           gl.map(_.toLowerCase).toSet == items.map(_.toLowerCase).toSet
       } else false
@@ -2050,66 +1881,6 @@ object QueryFacade {
     s"SELECT DISTINCT ${newItems.mkString(", ")} FROM $table" +
       s"$laterals$whereC$orderC$limitC"
   } catch { case scala.util.control.NonFatal(_) => stmt }
-
-  /** Decode a quoted SQL string literal the way Spark's parser does
-    * (ParserUtils.unescapeSQLString): backslash escapes (\\ \' \" \n
-    * \t \r \b \0 \Z, \uXXXX) plus the doubled-quote form. A rewrite
-    * that reads literal TEXT out of the statement must apply this
-    * before handing the value to a programmatic Column, or patterns
-    * like 'co\\..*' reach the dictionary with a double backslash the
-    * scan path would never see.
-    *
-    * Mirrors Spark's `appendEscapedChar` exactly — in particular \%
-    * and \_ KEEP their backslash (MySQL-compatible LIKE escapes: the
-    * lexer leaves them escaped so LIKE still sees a literal %/_), \Z
-    * is the SUB control char (0x1A), and \f has NO special meaning
-    * (plain 'f', the default arm). Dropping the backslash of \% here
-    * would turn an escaped literal % into a wildcard on the
-    * dictionary path only — an over-broad match set emitted as an
-    * exact IN-list with no re-verify (wrong rows vs the scan path).
-    * UnescapeSpec gates this against spark.sql round-trips. */
-  private[graft] def unescapeSqlLiteral(quoted: String): String = {
-    val body = quoted.stripPrefix("'").stripSuffix("'")
-    def isOct(c: Char) = c >= '0' && c <= '7'
-    def isHex(c: Char) = (c >= '0' && c <= '9') ||
-      (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
-    val sb = new StringBuilder(body.length)
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\\' && i + 1 < body.length) {
-        val n = body.charAt(i + 1)
-        if (n == 'u' && i + 5 < body.length &&
-            (2 to 5).forall(k => isHex(body.charAt(i + k)))) {
-          sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16)
-            .toChar)
-          i += 6
-        } else if (n >= '0' && n <= '1' && i + 3 < body.length &&
-            isOct(body.charAt(i + 2)) && isOct(body.charAt(i + 3))) {
-          sb.append(Integer.parseInt(body.substring(i + 1, i + 4), 8)
-            .toChar)
-          i += 4
-        } else {
-          n match {
-            case 'n' => sb.append('\n')
-            case 't' => sb.append('\t')
-            case 'r' => sb.append('\r')
-            case 'b' => sb.append('\b')
-            case 'Z' => sb.append(26.toChar)
-            case '%' => sb.append("\\%")
-            case '_' => sb.append("\\_")
-            case '0' => sb.append(0.toChar)
-            case other => sb.append(other)
-          }
-          i += 2
-        }
-      } else if (c == '\'' && i + 1 < body.length &&
-          body.charAt(i + 1) == '\'') {
-        sb.append('\''); i += 2
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   private def serveRegexpLeaf(spark: SparkSession, stmt: String,
       colRef: String, pred: Column, predKey: String): Option[String] = {
@@ -2140,11 +1911,11 @@ object QueryFacade {
     if (graft.sources.RegexpIndex.isEmpty) return stmt
     val low = stmt.toLowerCase
     if (!low.contains("regexp_like") && !low.contains("like")) return stmt
-    val afterRegexp = RegexpLikeCall.replaceAllIn(stmt, m => {
+    val afterRegexp = SqlLexer.replaceAll(stmt, RegexpLikeCall) { m =>
       val served =
-        if (insideLiteral(stmt, m.start)) None
+        if (m.group(3) != null && !m.group(3).matches("[a-zA-Z]")) None
         else try {
-          val pattern = unescapeSqlLiteral(m.group(2))
+          val pattern = SqlLexer.unescapeSqlLiteral(m.group(2))
           // 3-arg match parameter ('i'/'c' —
           // RegexpPatternConverterUtils.isCaseInsensitive)
           val ci = Option(m.group(3)).exists(f =>
@@ -2153,19 +1924,18 @@ object QueryFacade {
           serveRegexpLeaf(spark, stmt, m.group(1),
             col("value").rlike(p), "re:" + p)
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
-    LikePredPattern.replaceAllIn(afterRegexp, m => {
+      served.getOrElse(m.matched)
+    }
+    SqlLexer.replaceAll(afterRegexp, LikePredPattern) { m =>
       val served =
-        if (insideLiteral(afterRegexp, m.start)) None
-        else try {
-          val pattern = unescapeSqlLiteral(m.group(2 + 1))
+        try {
+          val pattern = SqlLexer.unescapeSqlLiteral(m.group(2 + 1))
           serveRegexpLeaf(spark, afterRegexp, m.group(1),
             col("value").like(pattern), "like:" + pattern)
             .map(r => if (m.group(2) != null) s"(NOT $r)" else r)
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
+      served.getOrElse(m.matched)
+    }
   }
 
   // ---- H3 geo index: ST_Distance / polygon-inclusion predicates ----
@@ -2206,15 +1976,6 @@ object QueryFacade {
     s.matches("""[A-Za-z_]\w*(?:\.\w+)?""") &&
       !s.matches("""(?i)(?:e\d+.*)""")
 
-  private def geoRangesPred(cellCol: String,
-      ranges: Seq[graft.sources.GeoIndex.CellRange]): String =
-    ranges.map(r =>
-      if (r.lo == r.hi) s"`$cellCol` = ${r.lo}"
-      else s"`$cellCol` BETWEEN ${r.lo} AND ${r.hi}")
-      .mkString("(", " OR ", ")")
-
-  /** Emit the index-served form for a geo leaf over (lngRef, latRef),
-    * given the per-resolution range computer. None = keep the scan. */
   /** Resolve (qualified cell column, candidate/full ranges) for a
     * registered (lng, lat) pair at the best stored resolution. */
   private def geoCellRanges(spark: SparkSession, stmt: String,
@@ -2300,10 +2061,9 @@ object QueryFacade {
     if (!low.contains("st_distance") && !low.contains("stdistance") &&
         !low.contains("stcontains") && !low.contains("st_contains") &&
         !low.contains("stwithin") && !low.contains("st_within")) return stmt
-    val afterDist = GeoDistCall.replaceAllIn(stmt, m => {
+    val afterDist = SqlLexer.replaceAll(stmt, GeoDistCall) { m =>
       val served =
-        if (insideLiteral(stmt, m.start)) None
-        else try {
+        try {
           val (a1, a2, b1, b2) =
             (m.group(1), m.group(2), m.group(3), m.group(4))
           // exactly one point is the (col, col) pair, the other the
@@ -2327,12 +2087,11 @@ object QueryFacade {
                 strict = op == ">", r, ranges)
           }
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
-    val afterBetween = GeoDistBetween.replaceAllIn(afterDist, m => {
+      served.getOrElse(m.matched)
+    }
+    val afterBetween = SqlLexer.replaceAll(afterDist, GeoDistBetween) { m =>
       val served =
-        if (insideLiteral(afterDist, m.start)) None
-        else try {
+        try {
           val (a1, a2, b1, b2) =
             (m.group(1), m.group(2), m.group(3), m.group(4))
           val arms = Seq((a1, a2, b1, b2), (b1, b2, a1, a2))
@@ -2368,12 +2127,11 @@ object QueryFacade {
             else None
           }
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
-    GeoContainsCall.replaceAllIn(afterBetween, m => {
+      served.getOrElse(m.matched)
+    }
+    SqlLexer.replaceAll(afterBetween, GeoContainsCall) { m =>
       val served =
-        if (insideLiteral(afterBetween, m.start)) None
-        else try {
+        try {
           // contains-form groups: (1 wkt, 2 lng, 3 lat); within-form:
           // (4 lng, 5 lat, 6 wkt)
           val (wktLit, lngRef, latRef) =
@@ -2398,8 +2156,8 @@ object QueryFacade {
             }
           }
         } catch { case scala.util.control.NonFatal(_) => None }
-      java.util.regex.Matcher.quoteReplacement(served.getOrElse(m.matched))
-    })
+      served.getOrElse(m.matched)
+    }
   }
 
   // ---- TIMESTAMP index override ----
@@ -2411,20 +2169,20 @@ object QueryFacade {
   // row-group stats on a plain LONG column) instead of evaluating the
   // function per row.
   private val DtruncPattern =
-    ("""(?is)\bdatetrunc\s*\(\s*'(\w+)'\s*,\s*(\w+)\s*""" +
-      """(?:,\s*'milliseconds'\s*)?\)""").r
+    ("""(?is)\bdatetrunc\s*\(\s*'([^']*)'\s*,\s*(\w+)\s*""" +
+      """(?:,\s*'([^']*)'\s*)?\)""").r
 
   private[graft] def rewriteTimestampIndex(stmt: String): String = {
-    val table = FromTable.findFirstMatchIn(stmt).map(_.group(1))
-      .getOrElse(return stmt)
-    DtruncPattern.replaceAllIn(stmt, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (!insideLiteral(stmt, m.start) &&
-            graft.sources.TimestampIndex
-              .hasGranularity(table, m.group(2), m.group(1)))
-          "`" + graft.sources.TimestampIndex
-            .columnWithGranularity(m.group(2), m.group(1)) + "`"
-        else m.matched))
+    val table = FromTable.findFirstMatchIn(SqlLexer.mask(stmt))
+      .map(_.group(1)).getOrElse(return stmt)
+    SqlLexer.replaceAll(stmt, DtruncPattern) { m =>
+      val (unit, col) = (m.group(1), m.group(2))
+      val millisOut = Option(m.group(3)).forall(_.equalsIgnoreCase("milliseconds"))
+      if (millisOut && unit.matches("\\w+") &&
+          graft.sources.TimestampIndex.hasGranularity(table, col, unit))
+        "`" + graft.sources.TimestampIndex.columnWithGranularity(col, unit) + "`"
+      else m.matched
+    }
   }
 
   // ---- JSON_MATCH SQL predicate ----
@@ -2438,75 +2196,24 @@ object QueryFacade {
   private val JmPattern = """(?is)\bjson_match\s*\(""".r
   private val FromTable = """(?is)\bfrom\s+(\w+)""".r
 
-  /** Unescaped-single-quote parity up to `pos`: odd = inside a string
-    * literal (doubled '' counts as escape, so parity stays odd). */
-  private def insideLiteral(stmt: String, pos: Int): Boolean = {
-    var quotes = 0
-    var i = 0
-    while (i < pos) {
-      if (stmt.charAt(i) == '\'') quotes += 1
-      i += 1
-    }
-    quotes % 2 == 1
-  }
-
   private[graft] def rewriteJsonMatch(stmt: String): String = {
-    // first occurrence OUTSIDE string literals (a literal mentioning
-    // json_match(...) must stay verbatim)
-    val m = JmPattern.findAllMatchIn(stmt)
-      .find(mm => !insideLiteral(stmt, mm.start))
-      .getOrElse(return stmt)
+    val mask = SqlLexer.mask(stmt)
+    val m = JmPattern.findFirstMatchIn(mask).getOrElse(return stmt)
     val open = m.end - 1
-    // balanced close, quote-aware (the predicate is a string literal)
-    var depth = 0
-    var quote = false
-    var i = open
-    var close = -1
-    while (i < stmt.length && close < 0) {
-      val c = stmt.charAt(i)
-      if (quote) {
-        if (c == '\'')
-          if (i + 1 < stmt.length && stmt.charAt(i + 1) == '\'') i += 1
-          else quote = false
-      } else c match {
-        case '\'' => quote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
+    val close = SqlLexer.closing(mask, open)
     require(close > 0, "JSON_MATCH: unbalanced parens")
     val inner = stmt.substring(open + 1, close)
-    // first top-level comma outside quotes splits (column, 'predicate')
-    var d = 0
-    var q2 = false
-    var commaAt = -1
-    var j = 0
-    while (j < inner.length && commaAt < 0) {
-      val c = inner.charAt(j)
-      if (q2) {
-        if (c == '\'')
-          if (j + 1 < inner.length && inner.charAt(j + 1) == '\'') j += 1
-          else q2 = false
-      } else c match {
-        case '\'' => q2 = true
-        case '(' | '[' => d += 1
-        case ')' | ']' => d -= 1
-        case ',' if d == 0 => commaAt = j
-        case _ =>
-      }
-      j += 1
-    }
-    require(commaAt > 0, "JSON_MATCH expects (column, 'predicate')")
-    val colName = inner.substring(0, commaAt).trim.stripPrefix("`")
-      .stripSuffix("`")
-    val predLit = inner.substring(commaAt + 1).trim
-    require(predLit.length >= 2 && predLit.head == '\'' && predLit.last == '\'',
+    // the first top-level comma splits (column, 'predicate')
+    val column = SqlLexer.splitRaw(inner).head
+    require(column.nonEmpty && column.length < inner.length,
+      "JSON_MATCH expects (column, 'predicate')")
+    val colName = column.trim.stripPrefix("`").stripSuffix("`")
+    val predLit = inner.substring(column.length + 1).trim
+    require(SqlLexer.singleQuoted(predLit),
       s"JSON_MATCH predicate must be a string literal, got '$predLit'")
     val predicate = predLit.substring(1, predLit.length - 1)
       .replace("''", "'")
-    val spec = FromTable.findFirstMatchIn(stmt)
+    val spec = FromTable.findFirstMatchIn(mask)
       .flatMap(t => graft.sources.JsonShred.tableSpec(t.group(1)))
     val compiled = graft.sources.JsonShred
       .compileToSql(colName, predicate, spec)
@@ -2527,6 +2234,19 @@ object QueryFacade {
   private val VsimPattern =
     """(?is)(from\s+(\w+)\s+where\s+)vector_similarity(_radius)?\s*\(""".r
   private val WherePattern = """(?is)\bfrom\s+\w+\s+where\s+""".r
+
+  /** The first WHERE-leading VECTOR_SIMILARITY[_RADIUS] call: its match
+    * on the mask (group 1 is `FROM t WHERE `), the offset of its closing
+    * paren (-1 when unbalanced) and its trimmed arguments. */
+  private def vsimCall(stmt: String)
+      : Option[(scala.util.matching.Regex.Match, Int, Seq[String])] = {
+    val mask = SqlLexer.mask(stmt)
+    VsimPattern.findFirstMatchIn(mask).map { m =>
+      val close = SqlLexer.closing(mask, m.end - 1)
+      (m, close, if (close < 0) Nil
+        else SqlLexer.splitRaw(stmt.substring(m.end, close)).map(_.trim))
+    }
+  }
   private val VsimAnywhere = """(?is)^vector_similarity(_radius)?\s*\(""".r
 
   /** Normalization pre-pass: the rewrites below anchor on the
@@ -2537,47 +2257,14 @@ object QueryFacade {
     * first and intersects siblings after, regardless of where the
     * user wrote it). Non-AND shapes are left untouched. */
   private[graft] def reorderVectorSimilarity(stmt: String): String = {
-    val m = WherePattern.findFirstMatchIn(stmt).getOrElse(return stmt)
-    val rest = stmt.substring(m.end)
-    // WHERE clause body = up to the first top-level tail keyword
-    val bodyEnd = topLevelTailPublic(rest).getOrElse(rest.length)
-    val body = rest.substring(0, bodyEnd)
-    // split top-level AND conjuncts (quote/paren aware); bail on a
-    // top-level OR (reordering would change semantics grouping)
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var quote: Char = 0
-    var last = 0
-    var i = 0
-    val lower = body.toLowerCase
-    def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 && (c == 'o' || c == 'O') &&
-            lower.startsWith("or", i) &&
-            (i == 0 || !isIdent(body.charAt(i - 1))) &&
-            (i + 2 >= body.length || !isIdent(body.charAt(i + 2))) =>
-          return stmt // top-level OR: leave untouched
-        case _ if depth == 0 && (c == 'a' || c == 'A') &&
-            lower.startsWith("and", i) &&
-            (i == 0 || !isIdent(body.charAt(i - 1))) &&
-            (i + 3 >= body.length || !isIdent(body.charAt(i + 3))) =>
-          parts += body.substring(last, i)
-          i += 2
-          last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    parts += body.substring(last)
-    val conjuncts = parts.result().map(_.trim).filter(_.nonEmpty)
+    val mask = SqlLexer.mask(stmt)
+    val m = WherePattern.findFirstMatchIn(mask).getOrElse(return stmt)
+    val bodyEnd = SqlLexer.clauseEnd(mask, m.end)
+    // a top-level OR would regroup the conjuncts: leave those alone
+    if (SqlLexer.topLevel(mask.substring(m.end, bodyEnd), OrWord).hasNext)
+      return stmt
+    val conjuncts = SqlLexer.splitRaw(stmt.substring(m.end, bodyEnd), AndWord)
+      .map(_.trim).filter(_.nonEmpty)
     val vsimIdx = conjuncts.indexWhere(c =>
       VsimAnywhere.findFirstIn(c).isDefined)
     if (vsimIdx <= 0) return stmt // absent or already first
@@ -2586,40 +2273,10 @@ object QueryFacade {
     val reordered = (conjuncts(vsimIdx) +:
       (conjuncts.take(vsimIdx) ++ conjuncts.drop(vsimIdx + 1)))
       .mkString(" AND ")
-    stmt.substring(0, m.end) + reordered + " " + rest.substring(bodyEnd)
+    stmt.substring(0, m.end) + reordered + " " + stmt.substring(bodyEnd)
   }
-
-  /** First TOP-LEVEL tail keyword (GROUP BY / ORDER BY / LIMIT /
-    * HAVING / set-ops): outside parens and quotes, word-boundary
-    * aware ('_' is an identifier char). Shared by the reorder pass
-    * and the brute vector-similarity rewrite. */
-  private def topLevelTailPublic(s0: String): Option[Int] = {
-    val kw =
-      """(?i)^(group\s+by|order\s+by|limit|having|union|intersect|except)\b""".r
-    def isIdentChar(c: Char) = c.isLetterOrDigit || c == '_'
-    var depth = 0
-    var quote: Char = 0
-    var j = 0
-    while (j < s0.length) {
-      val c = s0.charAt(j)
-      if (quote != 0) {
-        if (c == '\\') j += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 &&
-            kw.findFirstIn(s0.substring(j)).isDefined &&
-            (j == 0 || !isIdentChar(s0.charAt(j - 1))) =>
-          return Some(j)
-        case _ =>
-      }
-      j += 1
-    }
-    None
-  }
+  private val AndWord = """(?i)(?<!\w)and(?!\w)""".r
+  private val OrWord = """(?i)(?<!\w)or(?!\w)""".r
 
   /** Applies to every occurrence in the statement (e.g. both branches
     * of a UNION): each pass rewrites the first remaining predicate —
@@ -2631,43 +2288,10 @@ object QueryFacade {
     * (`VectorRadiusFilterOperator.java:239-241` `distance <= threshold`)
     * under this facade's cosine distance function. */
   private[graft] def rewriteVectorSimilarity(stmt: String): String = {
-    val m = VsimPattern.findFirstMatchIn(stmt).getOrElse(return stmt)
+    val (m, close, args) = vsimCall(stmt).getOrElse(return stmt)
     val isRadius = m.group(3) != null
     val table = m.group(2)
-    val open = m.end - 1
-    // balanced args: col, vecExpr, k
-    var depth = 0
-    var i = open
-    var close = -1
-    while (i < stmt.length && close < 0) {
-      stmt.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
     require(close > 0, "VECTOR_SIMILARITY: unbalanced parens")
-    val args = {
-      // split top-level commas
-      val out = Seq.newBuilder[String]
-      var d = 0
-      var last = open + 1
-      var j = open + 1
-      while (j < close) {
-        stmt.charAt(j) match {
-          case '(' | '[' => d += 1
-          case ')' | ']' => d -= 1
-          case ',' if d == 0 =>
-            out += stmt.substring(last, j)
-            last = j + 1
-          case _ =>
-        }
-        j += 1
-      }
-      out += stmt.substring(last, close)
-      out.result().map(_.trim)
-    }
     require(args.size == 3,
       s"VECTOR_SIMILARITY expects (column, vector, topK|threshold), got ${args.size} args")
     val Seq(vcol, vec, k) = args
@@ -2686,8 +2310,7 @@ object QueryFacade {
           s"l2distance($vcol, cast(($vec) as array<double>)) <= $k"
         else
           s"(1 - cosine_sim($vcol, cast(($vec) as array<double>))) <= $k"
-      return rewriteVectorSimilarity(
-        stmt.substring(0, m.start) + m.group(1) + pred + after)
+      return rewriteVectorSimilarity(stmt.substring(0, m.end(1)) + pred + after)
     }
     // topK form: remaining conjuncts (if any) stay OUTSIDE the ranked
     // subquery (top-k first, intersect after — the reference's default
@@ -2695,13 +2318,10 @@ object QueryFacade {
     val TailKw =
       """(?is)^\s*(group\s+by|order\s+by|limit|having|union|intersect|except)\b.*""".r
     val AndRest = """(?is)^\s*and\s+(.*)""".r
-    // first TOP-LEVEL tail keyword: outside parens and quotes; a
-    // keyword match only counts on a word boundary ('_' is an
-    // identifier char, so my_limit / col_having are NOT boundaries)
-    def topLevelTail(s0: String): Option[Int] = topLevelTailPublic(s0)
     val (outerWhere, outerTail) = after match {
       case AndRest(rest) =>
-        topLevelTail(rest) match {
+        SqlLexer.topLevel(SqlLexer.mask(rest), SqlLexer.ClauseTail)
+            .nextOption().map(_.start) match {
           case Some(at) =>
             (s" WHERE ${rest.substring(0, at).trim}", " " + rest.substring(at))
           case None => (s" WHERE ${rest.trim}", "")
@@ -2745,67 +2365,81 @@ object QueryFacade {
     * LIMIT/OFFSET/ROWS/RANGE/')' boundary, so window specs inside
     * OVER(...) are rewritten consistently too. */
   private[graft] def rewriteNullOrdering(stmt: String): String = {
-    val obPat = """(?i)\bORDER\s+BY\s+""".r
-    val out = new StringBuilder
+    val mask = SqlLexer.mask(stmt)
+    val edits = Seq.newBuilder[(Int, Int, String)]
     var pos = 0
-    for (m <- obPat.findAllMatchIn(stmt)) {
-      if (m.start >= pos && !insideLiteral(stmt, m.start)) {
-        // scan the key list from m.end to the clause terminator
-        var i = m.end
-        var depth = 0
-        var inStr = false
-        var end = stmt.length
-        val term = """(?i)^(LIMIT|OFFSET|ROWS|RANGE|FETCH)\b""".r
-        var scanning = true
-        while (scanning && i < stmt.length) {
-          val c = stmt.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false; i += 1 }
-          else c match {
-            case '\'' => inStr = true; i += 1
-            case '(' => depth += 1; i += 1
-            case ')' if depth == 0 => end = i; scanning = false
-            case ')' => depth -= 1; i += 1
-            case _ =>
-              if (depth == 0 &&
-                  term.findFirstIn(stmt.substring(i)).isDefined &&
-                  (i == 0 || !stmt.charAt(i - 1).isLetterOrDigit)) {
-                end = i; scanning = false
-              } else i += 1
-          }
-        }
-        if (scanning) end = stmt.length
-        val keyList = stmt.substring(m.end, end)
-        // split top-level commas
-        val keys = scala.collection.mutable.ArrayBuffer[String]()
-        var d = 0; var strq = false; var last = 0
-        for (j <- 0 until keyList.length) {
-          val c = keyList.charAt(j)
-          if (strq) { if (c == '\'') strq = false }
-          else c match {
-            case '\'' => strq = true
-            case '(' => d += 1
-            case ')' => d -= 1
-            case ',' if d == 0 =>
-              keys += keyList.substring(last, j); last = j + 1
-            case _ =>
-          }
-        }
-        keys += keyList.substring(last)
-        val rewritten = keys.map { k =>
-          val trimmed = k.trim
-          if (trimmed.isEmpty ||
-              """(?i)\bNULLS\s+(FIRST|LAST)\b""".r
-                .findFirstIn(trimmed).isDefined) k
-          else if ("""(?i)\bDESC\s*$""".r.findFirstIn(trimmed).isDefined)
-            k.replaceAll("""(?s)(\S)(\s*)$""", "$1 NULLS FIRST$2")
-          else k.replaceAll("""(?s)(\S)(\s*)$""", "$1 NULLS LAST$2")
-        }.mkString(",")
-        out.append(stmt.substring(pos, m.end)).append(rewritten)
-        pos = end
+    for (m <- OrderBy.findAllMatchIn(mask) if m.start >= pos) {
+      pos = SqlLexer.clauseEnd(mask, m.end, OrderKeysEnd)
+      val keys = SqlLexer.splitRaw(stmt.substring(m.end, pos)).map { k =>
+        val km = SqlLexer.mask(k).trim
+        if (km.isEmpty || NullsClause.findFirstIn(km).isDefined) k
+        else if (DescKey.findFirstIn(km).isDefined)
+          k.replaceAll("""(?s)(\S)(\s*)$""", "$1 NULLS FIRST$2")
+        else k.replaceAll("""(?s)(\S)(\s*)$""", "$1 NULLS LAST$2")
       }
+      edits += ((m.end, pos, keys.mkString(",")))
     }
-    out.append(stmt.substring(pos))
-    out.toString
+    SqlLexer.splice(stmt, edits.result())
+  }
+  private val OrderBy = """(?i)\bORDER\s+BY\s+""".r
+  private val OrderKeysEnd = """(?i)(?<!\w)(?:LIMIT|OFFSET|ROWS|RANGE|FETCH)\b""".r
+  private val NullsClause = """(?i)\bNULLS\s+(?:FIRST|LAST)\b""".r
+  private val DescKey = """(?i)\bDESC\s*$""".r
+
+  /** One named text pass over a statement. */
+  private final case class Pass(name: String,
+      run: (SparkSession, Map[String, String], String) => String)
+  private def textPass(name: String)(f: String => String) =
+    Pass(name, (_, _, s) => f(s))
+  private def sessionPass(name: String)(f: (SparkSession, String) => String) =
+    Pass(name, (spark, _, s) => f(spark, s))
+
+  /** Every text pass, in the order the facade applies them. Each one
+    * matches on the [[SqlLexer]] mask of its input, so none edits inside
+    * a literal, quoted identifier or comment. */
+  private val Passes: Seq[Pass] = Seq(
+    Pass("rlsFilters", (spark, opts, s) => applyRlsFilters(spark, s, opts)),
+    textPass("timestampIndex")(rewriteTimestampIndex),
+    textPass("stripHints")(stripHints),
+    textPass("reserved")(rewriteReserved),
+    textPass("asOf")(rewriteAsOf),
+    textPass("jsonMatch")(rewriteJsonMatch),
+    sessionPass("mvDistinct")(rewriteMvDistinct),
+    sessionPass("listAggMv")(rewriteListAggMv),
+    sessionPass("typeSafeCompare")(rewriteTypeSafeCompare),
+    // the schema resolver lets exprMinMax list the source columns it
+    // needs instead of SELECT * in the materialized __emm_src CTE
+    sessionPass("exprMinMax")((spark, s) => rewriteExprMinMax(s, tbl =>
+      try Some(spark.table(tbl).schema.fieldNames.toSeq)
+      catch { case scala.util.control.NonFatal(_) => None })),
+    textPass("clp")(rewriteClpCalls),
+    textPass("thetaSetOps")(rewriteThetaSetOps),
+    textPass("orderBySelectExpr")(rewriteOrderBySelectExpr),
+    sessionPass("mapValueShredded")(rewriteMapValueShredded),
+    sessionPass("geoIndexed")(rewriteGeoIndexed),
+    sessionPass("regexpIndexed")(rewriteRegexpIndexed),
+    sessionPass("textMatchIndexed")(rewriteTextMatchIndexed),
+    textPass("reorderVectorSimilarity")(reorderVectorSimilarity),
+    sessionPass("vectorSimilarityIndexed")(rewriteVectorSimilarityIndexed),
+    textPass("vectorSimilarity")(rewriteVectorSimilarity))
+
+  private def withOptions(query: String, extra: Map[String, String]): Parsed = {
+    val p = parseOptions(query)
+    p.copy(options = p.options ++ extra)
+  }
+
+  /** The text `spark.sql` receives for `query`: options parsed off (and
+    * `extra` merged in), every pass of [[Passes]] in order, then the
+    * null-handling pass that the enableNullHandling option picks. DDL
+    * and EXPLAIN statements skip the null-handling pass. */
+  private[graft] def rewrite(spark: SparkSession, query: String,
+      extra: Map[String, String] = Map.empty): String = {
+    val Parsed(opts, stmt0) = withOptions(query, extra)
+    val stmt = Passes.foldLeft(stmt0)((s, pass) => pass.run(spark, opts, s))
+    if (Ddl.isDdl(stmt) || ExplainPrefix.findFirstIn(stmt).isDefined) stmt
+    else if (opts.get("enablenullhandling").exists(_.equalsIgnoreCase("true")))
+      rewriteNullOrdering(stmt)
+    else rewriteJsonNullDefault(stmt)
   }
 
   def sql(spark: SparkSession, query: String): DataFrame =
@@ -2817,32 +2451,7 @@ object QueryFacade {
   private[graft] def sqlWithExtraOptions(spark: SparkSession,
       query: String, extra: Map[String, String]): DataFrame = {
     PinotFunctions.registerAll(spark)
-    val Parsed(parsedOpts, stmt0) = parseOptions(query)
-    val opts = parsedOpts ++ extra
-    // schema resolver for the exprMinMax source-pruning (r14 perf):
-    // lets the rewriter emit an explicit column list instead of
-    // SELECT * in the materialized __emm_src CTE
-    def emm(s: String): String = rewriteExprMinMax(s, tbl =>
-      try Some(spark.table(tbl).schema.fieldNames.toSeq)
-      catch { case scala.util.control.NonFatal(_) => None })
-    val stmt = rewriteVectorSimilarity(
-      rewriteVectorSimilarityIndexed(spark,
-        reorderVectorSimilarity(
-          rewriteTextMatchIndexed(spark,
-          rewriteRegexpIndexed(spark,
-          rewriteGeoIndexed(spark,
-          rewriteMapValueShredded(spark,
-          rewriteOrderBySelectExpr(
-          rewriteThetaSetOps(
-          rewriteClpCalls(
-          emm(
-          rewriteTypeSafeCompare(spark,
-          rewriteListAggMv(spark,
-          rewriteMvDistinct(spark,
-          rewriteJsonMatch(
-            rewriteAsOf(rewriteReserved(stripHints(
-              rewriteTimestampIndex(
-                applyRlsFilters(spark, stmt0, opts))))))))))))))))))))
+    val stmt = rewrite(spark, query, extra)
     if (Ddl.isDdl(stmt)) return Ddl.execute(spark, stmt)
     // Pinot EXPLAIN PLAN FOR <query> (PinotQueryResource explain
     // support): one row per plan-tree line, mirroring the reference's
@@ -2854,12 +2463,9 @@ object QueryFacade {
         org.apache.spark.sql.execution.FormattedMode).split("\n")
       return lines.toSeq.toDF("plan")
     }
-    val stmtNulls =
-      if (opts.get("enablenullhandling").exists(_.equalsIgnoreCase("true")))
-        rewriteNullOrdering(stmt)
-      else rewriteJsonNullDefault(stmt)
-    val df = spark.sql(stmtNulls)
-    val explicit = opts.get("explicitlimit").exists(_.toBoolean)
+    val df = spark.sql(stmt)
+    val explicit = withOptions(query, extra).options.get("explicitlimit")
+      .exists(_.toBoolean)
     val isSelect = stmt.trim.toLowerCase.startsWith("select") ||
       stmt.trim.toLowerCase.startsWith("with")
     if (!explicit && isSelect && !hasTopLevelLimit(df.queryExecution.logical))

@@ -98,7 +98,7 @@ object ExprMinMaxScaleProbe {
       " monotonically_increasing_id() AS __emm_ord FROM emm_probe_t")
     for ((label, stmt) <- Seq("mixed global 3p+count" -> mixedGlobal,
         "mixed grouped 3p+count" -> mixedGrouped)) {
-      val rewritten = graft.sql.QueryFacade.rewriteExprMinMax(stmt)
+      val rewritten = graft.sql.QueryFacade.rewrite(spark, stmt)
       require(rewritten.contains("__emm_src"), s"rewrite did not fire: $stmt")
       time(s"$label (as-is)")(rewritten)
       time(s"$label (cached src)")(rewritten.replace(srcCte,

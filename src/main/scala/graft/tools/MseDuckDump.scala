@@ -68,8 +68,7 @@ object MseDuckDump {
               val raw = MseCompat.substitute(c.sql, views)
               val stripped = graft.sql.QueryFacade.stripHints(
                 graft.sql.QueryFacade.parseOptions(raw).sql)
-              val engineSql = graft.sql.QueryFacade.rewriteAsOf(
-                graft.sql.QueryFacade.rewriteReserved(stripped))
+              val engineSql = graft.sql.QueryFacade.rewrite(spark, raw)
               try {
                 val rows = spark.sql(engineSql).collect()
                 // JSON rows: cells stringified with type tags the

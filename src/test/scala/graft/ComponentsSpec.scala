@@ -62,6 +62,14 @@ class ComponentsSpec extends SparkSpec {
     assert(got.length == 60 && got.forall(_.getLong(1) == 0L))
   }
 
+  test("driverEdgeLimit = Long.MaxValue keeps the driver path's components") {
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L))
+    val got = Dedup.components(edges.toDF("id_a", "id_b"),
+        driverEdgeLimit = Long.MaxValue)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFind(edges))
+  }
+
   test("disjoint cliques keep distinct min labels") {
     val cliques = Seq(Seq(1L, 2L, 3L), Seq(10L, 11L, 12L, 13L), Seq(50L, 51L))
     val edges = cliques.flatMap(c => for (a <- c; b <- c if a < b) yield (a, b))

@@ -861,7 +861,69 @@ class FacadeAndFunctionsSpec extends SparkSpec {
     assert(rw("SELECT 'it\\'s $docId' AS a, $segmentName AS s")
       == "SELECT 'it\\'s $docId' AS a, " +
         "concat('partition-', cast(spark_partition_id() as string)) AS s")
+    // doubled-quote escapes, quoted identifiers and comments are
+    // protected regions too
+    for (q <- Seq("SELECT 'it''s $docId' AS a", "SELECT `$docId` FROM t",
+        "SELECT 1 -- $hostName\nFROM t", "SELECT /* $segmentName */ 1"))
+      assert(rw(q) == q)
     // outside literals the substitution still applies
     assert(rw("SELECT $docId AS d").contains("monotonically_increasing_id"))
+  }
+
+  test("user literals round-trip through QueryFacade.rewrite and sql") {
+    init
+    for (lit <- Seq("round(2.5)", "concat(a, b)", "mode(x)", "bit_and(1)",
+        "x AS VARCHAR)", "1GROUP BY", "/*+ hint */")) {
+      val q = s"SELECT '$lit' AS s FROM nation LIMIT 1"
+      assert(QueryFacade.rewrite(spark, q) == q, lit)
+      assert(QueryFacade.sql(spark, q).as[String].collect().toSeq == Seq(lit))
+    }
+  }
+
+  test("no pass edits inside a literal, quoted identifier or comment") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    init
+    // one trigger per text pass (and per rewrite inside rewriteReserved)
+    val triggers = Seq("round(2.5)", "AS VARCHAR)", "1GROUP BY",
+      "/*+ x */", "$docId", "json_match(props, '\"$.k\" = 1')",
+      "vector_similarity(e, array(1.0), 3)", "ORDER BY n_name",
+      "datetrunc('DAY', ts)", "listagg(n_name, ',')", "concat(a, b)",
+      "mode(x)", "bit_and(1)", "dateadd('day', 1, ts)", "ARRAY[1, 2]",
+      "U&'d\\0061ta'", "BETWEEN SYMMETRIC a AND b", "CAST(x AS DECIMAL)",
+      "to_timestamp(ts)", "row_number() over ()", "from nation",
+      "FROM a ASOF JOIN b MATCH_CONDITION(a.t >= b.t) ON a.k = b.k",
+      "n_nationkey = n_name", "exprmin(n_name, n_nationkey)",
+      "clpMatch(msg, '*x*')", "mapValue(m, 'k')", "text_match(c, 'x')",
+      "regexp_like(n_name, 'x')", "n_name LIKE 'x%'",
+      "ST_Distance(ST_Point(lng, lat), ST_Point(1.0, 2.0)) < 5",
+      "distinctcountthetasketch(x, '', 'a', 'b', 'SET_UNION($1,$2)')",
+      "jsonextractscalar(props, '$.k', 'INT', null)")
+    val regions: Seq[String => String] = Seq(
+      t => "'it''s " + t.replace("'", "''") + "'",
+      t => "'it\\'s " + t.replace("'", "\\'") + "'",
+      t => "\"" + t.replace("\"", "\\\"") + "\"",
+      t => "`" + t.replace("`", "``") + "`",
+      t => "-- " + t + "\n",
+      t => "/* " + t + " */")
+    val hosts = Seq(
+      "SELECT @ AS s FROM nation",
+      "SELECT n_name FROM nation WHERE n_name <> @",
+      "SET enableNullHandling = true; SELECT n_name, @ FROM nation " +
+        "ORDER BY n_name",
+      "SET rlsFilters-nation = 'n_regionkey = 1'; SELECT @ FROM nation")
+    // each case: one trigger, one host, the trigger in every region kind
+    val prop = Prop.forAllNoShrink(Gen.oneOf(triggers), Gen.oneOf(hosts)) {
+      (t, host) => Prop.all(regions.map { r =>
+        val region = r(t)
+        val out = QueryFacade.rewrite(spark, host.replace("@", region))
+        val kept = graft.sql.SqlLexer.lex(out).regions
+          .map(x => out.substring(x.start, x.end))
+        Prop(kept.contains(region.stripSuffix("\n"))) :| s"$region in $out"
+      }: _*)
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(300).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, res.status)
   }
 }

@@ -130,7 +130,7 @@ class RegexpIndexSpec extends SparkSpec {
       """'dot\.star\*'""", """'\0nul'""", """'\7seven'""", """'\42x'""")
     for (q <- corpus) {
       val viaSpark = spark.sql(s"SELECT $q AS v").head.getString(0)
-      val viaGraft = graft.sql.QueryFacade.unescapeSqlLiteral(q)
+      val viaGraft = graft.sql.SqlLexer.unescapeSqlLiteral(q)
       assert(viaGraft == viaSpark,
         s"$q: graft=${viaGraft.map(_.toInt).mkString(",")}" +
           s" spark=${viaSpark.map(_.toInt).mkString(",")}")
