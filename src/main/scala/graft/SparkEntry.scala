@@ -6,6 +6,24 @@ import graft.queries.AllQueries
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The one local session every main and the test suites build:
+    * `cores` task slots and as many shuffle partitions, the Catalyst
+    * extensions, UTC session time, no UI, WARN logging and the
+    * Pinot-named functions registered. AQE is Spark 4's default. */
+  def localSession(cores: Int, app: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(app)
+      .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.PinotFunctions.registerAll(spark)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * TPC-H Q1-style pricing summary (SURVEY §7.2 minimum slice). */
   def entry(spark: SparkSession): DataFrame =

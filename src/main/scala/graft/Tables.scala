@@ -33,17 +33,20 @@ final case class Tables(spark: SparkSession, dir: String) {
   lazy val orders: DataFrame = table("orders")
   lazy val lineitem: DataFrame = table("lineitem")
 
-  /** events.parquet stores ts as TIMESTAMP(NANOS) which Spark has no
-    * native type for; read it as long (legacy conf) and convert to
-    * micros (verified lossless: all nanos are 000-suffixed), keeping the
-    * session-TZ-free NTZ type to match the other tables. */
+  /** The sf0.001, sf0.01 and sf0.1 events.parquet store ts as
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+    * TimestampNTZ directly. A copy that stores TIMESTAMP(NANOS) has no
+    * native Spark type: the legacy conf reads it as long, and the
+    * branch below converts it to micros (dropping sub-microsecond
+    * digits), keeping the session-TZ-free NTZ type of the other
+    * tables. */
   lazy val events: DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table("events") // resolve (and cache) BEFORE the outer
     // computeIfAbsent — nesting them would be a recursive map update
     Tables.cache.computeIfAbsent((spark, dir, "events__converted"), { _ =>
-      // driver testdata stores ts as TIMESTAMP(NANOS) → read as long and
-      // convert; re-ingested copies already carry a proper timestamp
+      // a TIMESTAMP(NANOS) copy reads as long → convert; the MICROS
+      // tables already carry a proper timestamp
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts",
           timestamp_micros(expr("ts div 1000")).cast(TimestampNTZType))

@@ -463,4 +463,40 @@ object MseCompat {
 
   def summary(rs: Seq[MResult]): Map[String, Int] =
     rs.groupBy(_.outcome.tag).view.mapValues(_.size).toMap.withDefaultValue(0)
+
+  /** Runs the reference's MSE suites and writes the full outcome report
+    * to target/mse_report.txt. Optional arg 1 = filter substring on
+    * "file:suite". */
+  def main(args: Array[String]): Unit = {
+    val filter = args.headOption.getOrElse("")
+    val spark = graft.SparkEntry.localSession(8, "mse-compat")
+    DialectConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val results = loadSuites()
+      .filter(s => filter.isEmpty || s"${s.file}:${s.name}".contains(filter))
+      .flatMap(runSuite(spark, _))
+
+    val sb = new StringBuilder
+    results.groupBy(_.c.file).toSeq.sortBy(_._1).foreach { case (f, rs) =>
+      val s = summary(rs)
+      sb.append(f"$f%-34s pass=${s("pass")}%4d ran=${s("ran")}%4d " +
+        f"mism=${s("mismatch")}%4d err=${s("error")}%4d skip=${s("skipped")}%4d\n")
+    }
+    val tot = summary(results)
+    sb.append(s"\nTOTAL: $tot of ${results.size}\n\n== FAILURES ==\n")
+    def oneLine(s: String, n: Int) = s.replaceAll("\\s+", " ").take(n)
+    results.foreach { r =>
+      r.outcome match {
+        case Mismatch(d) =>
+          sb.append(s"MISMATCH ${r.id}\n  sql: ${oneLine(r.c.sql, 220)}\n  $d\n")
+        case Failed(e) =>
+          sb.append(s"ERROR ${r.id}\n  sql: ${oneLine(r.c.sql, 220)}\n  ${oneLine(e, 260)}\n")
+        case _ =>
+      }
+    }
+    Files.createDirectories(Paths.get("target"))
+    Files.writeString(Paths.get("target/mse_report.txt"), sb.toString)
+    println(sb.toString.linesIterator.take(60).mkString("\n"))
+    println(s"full report: target/mse_report.txt  TOTAL: $tot of ${results.size}")
+    spark.stop()
+  }
 }

@@ -11,7 +11,7 @@ import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.util.Utf8
 import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** OnTime suite cross-check — the reference's airline-benchmark
@@ -122,15 +122,7 @@ object OnTimeCompat {
     val queryFile =
       if (args.lift(1).exists(_.equalsIgnoreCase("10k"))) QueryFile10K
       else QueryFile
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("ontime-compat")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.PinotFunctions.registerAll(spark)
+    val spark = graft.SparkEntry.localSession(8, "ontime-compat")
     // Calcite double-quoted identifiers ("Month") — same dialect conf
     // the MSE gate runs under (timezone irrelevant: no temporal types)
     spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** SSB (Star Schema Benchmark) compat gate — replays the reference's
   * own integration suite (`SSBQueryTest.java`: five committed avro
   * tables under `examples/batch/ssb/`, the 13-query set in
@@ -46,15 +44,7 @@ object SsbCompat {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/ssb_duck")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("ssb-compat")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.PinotFunctions.registerAll(spark)
+    val spark = graft.SparkEntry.localSession(8, "ssb-compat")
 
     Files.createDirectories(Paths.get(s"$outDir/tables"))
     Files.createDirectories(Paths.get(s"$outDir/results"))

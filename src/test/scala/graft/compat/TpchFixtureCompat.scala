@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** TPC-H fixture replay — the reference's OWN integration corpus
   * (`TPCHQueryIntegrationTest.java`: eight committed avro tables under
   * `examples/batch/tpch/`, queries `tpch/<n>.sql` for n in 1..24 minus
@@ -30,15 +28,7 @@ object TpchFixtureCompat {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/tpch_duck")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("tpch-fixture-compat")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.PinotFunctions.registerAll(spark)
+    val spark = graft.SparkEntry.localSession(8, "tpch-fixture-compat")
 
     Files.createDirectories(Paths.get(s"$outDir/tables"))
     Files.createDirectories(Paths.get(s"$outDir/results"))

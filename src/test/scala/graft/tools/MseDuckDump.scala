@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.compat.MseCompat
 
 /** Cross-engine arm for the MSE queries WITHOUT committed gold outputs:
@@ -20,15 +19,7 @@ object MseDuckDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/mse_duck")
     val filter = args.drop(1).headOption.getOrElse("")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("mse-duck-dump")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.PinotFunctions.registerAll(spark)
+    val spark = graft.SparkEntry.localSession(8, "mse-duck-dump")
     MseCompat.DialectConf.foreach { case (k, v) => spark.conf.set(k, v) }
 
     Files.createDirectories(Paths.get(s"$outDir/tables"))
@@ -107,7 +98,7 @@ object MseDuckDump {
                 manifest.append(s"""{"id":${jstr(id)},"sql":${jstr(stripped)},""" +
                   s""""ordered":$ordered}""")
                 nDumped += 1
-              } catch { case _: Throwable => () } // engine errors tracked by MseCompatProbe
+              } catch { case _: Throwable => () } // engine errors tracked by MseCompat.main
             }
           }
         }

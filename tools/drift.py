@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Bench drift gate (PLANS.md round-8 rule): compare two FULL bench
 snapshots and list every carried-over query that regressed by BOTH
->1.3x and >0.15 s. Each listed query owes a solo DriftAb adjudication
-row in PLANS.md within the round (SPARK_GRAFT_BENCH_ONLY=<query>
-best-of-2, vs the prior snapshot).
+>1.3x and >0.15 s. Each listed query owes a solo `Probe ab`
+adjudication row in PLANS.md within the round
+(`sbt "Test/runMain graft.Probe ab <reps> <query>"`, vs the prior
+snapshot).
 
 Round-14 fix: the r13 verdict found the old tail-scrape blind — the
 driver's BENCH_r{N}.json keeps only a TRUNCATED tail of the stdout

@@ -5,7 +5,7 @@ analogous independent-engine comparison).
 
 Usage: python3 tools/mse_duck.py /tmp/mse_duck
 
-Reads the dump produced by `sbt "runMain graft.tools.MseDuckDump"`:
+Reads the dump produced by `sbt "Test/runMain graft.tools.MseDuckDump"`:
 fixture tables as parquet, the engine's result rows as JSON, and a
 manifest with plain (non-facade-rewritten) SQL. Queries DuckDB cannot
 parse (Pinot-specific functions/dialect) are counted as `skipped` —
