@@ -4,9 +4,10 @@ package graft
   * prints ONE JSON line (driver contract → BENCH_r{N}.json).
   *
   * Methodology (mirrors JMH practice in the reference's pinot-perf):
-  * warm the JVM/codegen with one untimed pass of the flagship query,
-  * then time a single `collect()` per query — collect, not count, so
-  * Catalyst can't prune the projections being measured.
+  * warm the JVM/codegen with one untimed pass of every registered
+  * query, then run two timed passes interleaved across queries and
+  * keep the minimum `collect()` time per query — collect, not count,
+  * so Catalyst can't prune the projections being measured.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -150,6 +150,14 @@ object HttpGateway {
   def start(spark: SparkSession, resolve: String => DataFrame,
       port: Int = 0, cursorRoot: Option[String] = None,
       brokerTimeoutMs: Long = QueryGuard.DefaultBrokerTimeoutMs): Gateway = {
+    // the JDK server writes a response's headers and body as two
+    // segments; without TCP_NODELAY the body waits for the client's
+    // delayed ACK (~40 ms per request). The property is JVM-global and
+    // read once, when the JVM's first HttpServer is created, so it is
+    // set only when unset and only takes effect if no other HttpServer
+    // came first (build.sbt sets it for the forked test JVM).
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     val ids = new AtomicLong(0L)
     val store = new ResponseStore(spark, cursorRoot.getOrElse(

@@ -189,10 +189,12 @@ object KafkaWire {
   }
 
   // ---- framing ----
-  /** [int32 size][payload] */
+  /** [int32 size][payload], as one write and one flush: with Nagle's
+    * algorithm a frame split across writes waits for the peer's
+    * delayed ACK (see [[WireSocket]]). */
   def writeFrame(out: DataOutputStream, payload: Array[Byte]): Unit = {
-    out.writeInt(payload.length)
-    out.write(payload)
+    out.write(ByteBuffer.allocate(4 + payload.length)
+      .putInt(payload.length).put(payload).array())
     out.flush()
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.io.{DataInputStream, DataOutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 
 import scala.collection.mutable
@@ -152,10 +151,10 @@ final class KafkaWireBroker(host: String = "127.0.0.1",
     logs.keys.map(_._1).toSeq.distinct.sorted
   }
 
-  private def serve(sock: Socket): Unit =
+  private def serve(sock: Socket): Unit = {
+    val conn = WireSocket.accepted(sock)
+    import conn.{in, out}
     try {
-      val in = new DataInputStream(sock.getInputStream)
-      val out = new DataOutputStream(sock.getOutputStream)
       while (running) {
         val frame = readFrame(in)
         val r = new Reader(frame)
@@ -183,7 +182,8 @@ final class KafkaWireBroker(host: String = "127.0.0.1",
         writeFrame(out, w.result())
       }
     } catch { case _: Throwable => () } // connection closed
-    finally sock.close()
+    finally conn.close()
+  }
 
   // (api key, min, max): Produce v3/Fetch v4 carry magic-2 record
   // batches (the pre-flexible modern dialect); Produce v9/Fetch v12/
@@ -336,10 +336,7 @@ final class KafkaWireBroker(host: String = "127.0.0.1",
       maxBytes: Int): (Seq[Record], Long) = logs.synchronized {
     val log = logs.getOrElse((topic, partition),
       mutable.ArrayBuffer.empty[Record])
-    val start = log.indexWhere(_.offset >= math.max(0L, from)) match {
-      case -1 => log.length
-      case idx => idx
-    }
+    val start = KafkaWireBroker.firstAtOrAbove(log, from)
     val sel = Seq.newBuilder[Record]
     var size = 0
     var i = start
@@ -495,5 +492,25 @@ final class KafkaWireBroker(host: String = "127.0.0.1",
       }
     }
     ()
+  }
+}
+
+object KafkaWireBroker {
+
+  /** Index of the first record whose offset is at or above `from`
+    * (`log.length` if none): a binary search, valid because offsets
+    * strictly increase along a partition log — `append` assigns the
+    * last offset + 1, and `compact` and `truncate` only remove
+    * records. The fetch path calls it under the log lock the
+    * producer's `append` also takes, on logs of 10^5 records. */
+  private[graft] def firstAtOrAbove(log: collection.IndexedSeq[Record],
+      from: Long): Int = {
+    var lo = 0
+    var hi = log.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (log(mid).offset < from) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 }

@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.Socket
-
 import KafkaWire._
 
 /** Blocking Kafka wire-protocol client (the consumer/producer side of
@@ -20,15 +17,20 @@ import KafkaWire._
   * / Fetch v12 / ApiVersions v3 with compact strings, compact
   * bytes/arrays and tagged fields (header v2 requests, header v1
   * responses; ApiVersions replies stay header v0 so negotiation can
-  * never deadlock on an unknown version). */
+  * never deadlock on an unknown version).
+  *
+  * The socket is a [[WireSocket]]: `readTimeoutMs` bounds every read,
+  * so a broker that accepts and never answers fails the call with
+  * `SocketTimeoutException` instead of hanging the driver's
+  * `latestOffset` or a fetch task. */
 final class KafkaWireClient(host: String, port: Int,
     clientId: String = "graft", modern: Boolean = true,
-    flexible: Boolean = false)
+    flexible: Boolean = false,
+    readTimeoutMs: Int = WireSocket.DefaultReadTimeoutMs)
   extends AutoCloseable {
 
-  private val sock = new Socket(host, port)
-  private val in = new DataInputStream(sock.getInputStream)
-  private val out = new DataOutputStream(sock.getOutputStream)
+  private val sock = WireSocket.connect(host, port, readTimeoutMs)
+  import sock.{in, out}
   private var correlation = 0
 
   private def call(apiKey: Short, version: Short = 0)

@@ -405,16 +405,12 @@ object PulsarWire {
   * answered transparently. `readTimeoutMs` bounds every read so a
   * stalled broker cannot hang the driver (the Kinesis lesson). */
 final class PulsarWireClient(host: String, port: Int,
-    authToken: Option[String] = None, readTimeoutMs: Int = 30000) {
+    authToken: Option[String] = None,
+    readTimeoutMs: Int = WireSocket.DefaultReadTimeoutMs) {
   import PulsarWire._
 
-  private val socket = new java.net.Socket()
-  socket.connect(new java.net.InetSocketAddress(host, port), 10000)
-  socket.setSoTimeout(readTimeoutMs)
-  private val out = new DataOutputStream(
-    new java.io.BufferedOutputStream(socket.getOutputStream))
-  private val in = new DataInputStream(
-    new java.io.BufferedInputStream(socket.getInputStream))
+  private val socket = WireSocket.connect(host, port, readTimeoutMs)
+  import socket.{in, out}
   private val reqIds = new java.util.concurrent.atomic.AtomicLong(1)
 
   locally {

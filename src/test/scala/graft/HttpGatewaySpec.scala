@@ -76,6 +76,28 @@ class HttpGatewaySpec extends SparkSpec {
     } finally gw.stop()
   }
 
+  test("gateway transport adds under 20 ms per request (no delayed-ACK stall)") {
+    // round trip minus the broker's own timeUsedMs is the transport's
+    // share; a response sent as two segments without TCP_NODELAY waits
+    // ~40 ms for the client's delayed ACK
+    val gw = HttpGateway.start(spark, _ => metrics)
+    try {
+      val url = s"http://127.0.0.1:${gw.port}/query/sql"
+      val overheads = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        val (code, body) = request(url, "POST", Some("""{"sql": "SELECT 1"}"""))
+        val rtt = (System.nanoTime() - t0) / 1e6
+        assert(code == 200 && !body.contains("errorCode"), body)
+        val used = "\"timeUsedMs\":(\\d+)".r
+          .findFirstMatchIn(body).map(_.group(1).toDouble)
+          .getOrElse(fail(s"no timeUsedMs in $body"))
+        rtt - used
+      }.sorted
+      val median = overheads(overheads.length / 2)
+      assert(median < 20.0, s"median transport overhead $median ms: $overheads")
+    } finally gw.stop()
+  }
+
   test("GET /timeseries/api/v1/query_range carries the endpoint JSON") {
     val gw = HttpGateway.start(spark, _ => metrics)
     try {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.streaming.{KafkaSocketSourceProvider, KafkaSource, KafkaWire, KafkaWireBroker, KafkaWireClient, UpsertStream}
 
@@ -443,6 +445,74 @@ class KafkaSocketSpec extends SparkSpec {
       assert(e.getMessage.contains("retention"))
       // ranges entirely at/above the new log start still read fine
       assert(read(4, 10) == (4L until 10L))
+    } finally broker.close()
+  }
+
+  test("fetch start lookup matches a linear scan on compacted and truncated logs") {
+    // offsets 0 until n, a random share compacted away (survivors keep
+    // their offsets), then everything below a random point truncated —
+    // the only shapes append, compact and truncate can leave
+    val logs = for {
+      n <- Gen.choose(0, 300)
+      keep <- Gen.choose(0.05, 1.0)
+      mask <- Gen.listOfN(n, Gen.choose(0.0, 1.0).map(_ < keep))
+      before <- Gen.choose(0, n + 1)
+    } yield (n, (0 until n).zip(mask).collect {
+      case (o, true) if o >= before =>
+        KafkaWire.Record(null, Array[Byte](1), 0L, o.toLong)
+    }.toIndexedSeq)
+    for (seed <- 1 to 200) {
+      val (n, log) = logs.pureApply(Gen.Parameters.default, Seed(seed))
+      for (from <- -2L to n + 2L) {
+        val scan = log.indexWhere(_.offset >= math.max(0L, from)) match {
+          case -1 => log.length
+          case idx => idx
+        }
+        assert(KafkaWireBroker.firstAtOrAbove(log, from) == scan,
+          s"seed $seed, from $from, offsets ${log.map(_.offset)}")
+      }
+    }
+  }
+
+  test("a broker that accepts and never answers fails the call on the read timeout") {
+    val silent = new java.net.ServerSocket(0, 1,
+      java.net.InetAddress.getLoopbackAddress)
+    val held = new java.util.concurrent.LinkedBlockingQueue[java.net.Socket]
+    val acceptor = new Thread(() =>
+      try held.put(silent.accept()) catch { case _: Throwable => () })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try {
+      val t0 = System.nanoTime()
+      val c = new KafkaWireClient("127.0.0.1", silent.getLocalPort,
+        readTimeoutMs = 200)
+      try intercept[java.net.SocketTimeoutException](c.metadata(Seq("t")))
+      finally c.close()
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 5000, s"timed out after $ms ms")
+    } finally {
+      silent.close()
+      Option(held.poll(1, java.util.concurrent.TimeUnit.SECONDS))
+        .foreach(_.close())
+    }
+  }
+
+  test("200 sequential listOffset round trips take under 2 s (no delayed-ACK stall)") {
+    // a frame sent in several writes without TCP_NODELAY waits ~40 ms
+    // for the peer's delayed ACK on each side: ~16 s for 200 calls
+    val broker = new KafkaWireBroker(numPartitions = 1).start()
+    try {
+      broker.append("t", 0, "k".getBytes, "v".getBytes, 1000L)
+      val c = new KafkaWireClient("127.0.0.1", broker.port)
+      try {
+        assert(c.listOffset("t", 0, KafkaWire.LatestTs) == 1L)
+        val t0 = System.nanoTime()
+        (1 to 200).foreach { _ =>
+          assert(c.listOffset("t", 0, KafkaWire.LatestTs) == 1L)
+        }
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(ms < 2000, s"200 round trips took $ms ms")
+      } finally c.close()
     } finally broker.close()
   }
 }
